@@ -2302,4 +2302,102 @@ class HttpFacadeSpec extends SparkSuite {
     val unit = get("/api/v1/catalog/namespaces?parent=no%1Fsuch")
     assert(unit.statusCode === 404)
   }
+
+  // ---- golden error contract -------------------------------------------
+  //
+  // `http_golden.txt` (test resources) lists one request per `>>> ` line
+  // and, under it, the exact status, Content-Type and body the façade
+  // answers. The requests cover every route's caller errors (bad table
+  // path, unknown table, missing / non-integer / out-of-range parameters,
+  // unknown or ill-typed columns, malformed bodies), several requests
+  // that break two rules at once (so the ORDER of the checks is pinned),
+  // the lifecycle 400s/404s, and the 200 bodies of the catalog, status
+  // and one results page. Bodies are compared after normalizing query
+  // UUIDs, NDJSON `duration_seconds`, plan expression ids and the
+  // fixture directory. On a
+  // mismatch the observed file is written to
+  // target/http_golden.actual for diffing.
+
+  /** Small purpose-built tables in their own `golden` namespace, so the
+    * catalog listings are independent of the other tests' tables. */
+  private def goldenTables(): Unit = {
+    spark.sql("CREATE DATABASE IF NOT EXISTS golden")
+    for (t <- Seq("nation", "documents"))
+      spark.sql(s"""CREATE TABLE IF NOT EXISTS golden.$t
+        USING parquet LOCATION '$sf/$t.parquet'""")
+    def ctas(name: String, select: String): Unit =
+      spark.sql(s"CREATE TABLE IF NOT EXISTS golden.$name USING parquet AS $select")
+    ctas("kit", "SELECT 1L AS id, 'a' AS s, array(1.0D, 0.0D) AS vec, " +
+      "map('k', 'v') AS props, cast('ab' AS binary) AS payload, 1.5D AS d")
+    ctas("dedup_idx",
+      "SELECT 1L AS cid, 'x' AS dig, array('a') AS csh, array(1L, 2L) AS sig")
+    ctas("ivf_idx", "SELECT 1L AS id, array(1.0D, 0.0D) AS vec, 0 AS cid")
+    ctas("ivf_cent", "SELECT 0 AS cid, array(1.0D, 0.0D) AS cvec")
+    ctas("ivf_cent3", "SELECT 0 AS cid, array(1.0D, 0.0D, 0.0D) AS cvec")
+    ctas("postings", "SELECT 'a' AS t, 1L AS id, 1L AS tf, 1L AS dl")
+    ctas("bm25_stats", "SELECT 1L AS n_docs, 1L AS total_tokens")
+    ctas("cont_idx", "SELECT 1L AS cid, 1L AS fp, 0 AS fpb")
+    ctas("pq_codes", "SELECT 1L AS id, 0 AS sub, 0 AS code, 0 AS cid")
+    ctas("pq_cb", "SELECT 0 AS code, 0 AS sub, array(1.0D) AS cvec")
+    ctas("nb_counts", "SELECT 'a' AS t, 1L AS cp, 1L AS cn")
+    ctas("nb_totals_partial", "SELECT 1L AS dp, 1L AS dn")
+    ctas("nb_totals_multi", "SELECT * FROM VALUES (1L, 1L, 1L, 1L, 1L), " +
+      "(2L, 2L, 2L, 2L, 2L) AS v(tp, tn, v, dp, dn)")
+    ctas("merges_ok", "SELECT 1 AS rank, 'a' AS lhs, 'b' AS rhs")
+    ctas("merges_str_rank", "SELECT 'a' AS rank, 'a' AS lhs, 'b' AS rhs")
+    ctas("merges_int_sides", "SELECT 1 AS rank, 1 AS lhs, 'b' AS rhs")
+    ctas("merges_empty", "SELECT 1 AS rank, 'a' AS lhs, 'b' AS rhs WHERE false")
+    ctas("merges_dup",
+      "SELECT * FROM VALUES (1, 'a', 'b'), (1, 'c', 'd') AS v(rank, lhs, rhs)")
+    ctas("merges_upper", "SELECT 1 AS rank, 'A' AS lhs, 'b' AS rhs")
+    ctas("media_idx", "SELECT 1L AS id, 'png' AS format, array(1) AS hist, " +
+      "1L AS nn, 1L AS c1, 1L AS c2, 0 AS sb")
+    ctas("media_meta",
+      "SELECT 1 AS bin1, 1 AS bin2, 1L AS threshold_ppm, 1 AS n_buckets")
+    ctas("box_bounds", "SELECT 0L AS min_a, 1L AS max_a, 0L AS min_b, " +
+      "1L AS max_b, 2 AS bits, 4 AS n_buckets")
+    ctas("bloom", "SELECT 0 AS w, 0L AS bits")
+    ctas("sketch_str", "SELECT 'a' AS shard, 1L AS h")
+  }
+
+  private def goldenNormalize(body: String): String = body
+    .replace(sf, "<sf>")
+    .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}",
+      "<uuid>")
+    .replaceAll("\"duration_seconds\":[-+.0-9eE]+", "\"duration_seconds\":<t>")
+    .replaceAll("#\\d+", "#<n>") // expression ids in analyzer messages
+
+  test("golden: status, Content-Type and body of every route's error contract") {
+    goldenTables()
+    // {qid} in a request: a completed 200-row query (two result pages)
+    val exec = post("/api/v1/query/execute", "{\"sql\": \"SELECT l_orderkey, " +
+      "l_linenumber FROM lineitem ORDER BY l_orderkey, l_linenumber LIMIT 200\"}")
+    assert(exec.statusCode === 200, exec.body)
+    val qid = fieldOf(exec.body, "query_id")
+    val src = scala.io.Source.fromResource("graft/api/http_golden.txt",
+      getClass.getClassLoader)(scala.io.Codec.UTF8)
+    val golden = try src.mkString finally src.close()
+    val cases = golden.split("(?m)^>>> ").toSeq.filter(_.nonEmpty)
+    assert(cases.length > 400)
+    val observed = cases.map { c =>
+      val req = c.linesIterator.next()
+      val (method, rest) = req.span(_ != ' ')
+      val (path, body) = rest.trim.span(_ != ' ')
+      val publisher =
+        if (method == "POST") BodyPublishers.ofString(body.trim.replace("{qid}", qid))
+        else BodyPublishers.noBody()
+      val r = client.send(HttpRequest.newBuilder(url(path.replace("{qid}", qid)))
+        .method(method, publisher).build(), BodyHandlers.ofString())
+      val ctype = r.headers.firstValue("Content-Type").orElse("-")
+      s">>> $req\n<<< ${r.statusCode} $ctype\n${goldenNormalize(r.body)}\n"
+    }
+    val diffs = cases.zip(observed).filter { case (e, o) => ">>> " + e != o }
+    if (diffs.nonEmpty) {
+      java.nio.file.Files.write(java.nio.file.Paths.get("target", "http_golden.actual"),
+        observed.mkString.getBytes("UTF-8"))
+      fail(s"${diffs.length} golden rows differ (observed file: " +
+        "target/http_golden.actual); first:\n" + diffs.take(5).map {
+          case (e, o) => s"expected:\n>>> $e\nobserved:\n$o" }.mkString("\n"))
+    }
+  }
 }
