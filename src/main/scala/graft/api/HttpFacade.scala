@@ -6,10 +6,16 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
 import java.util.concurrent.Executors
 
+import scala.util.control.ControlThrowable
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
+import org.apache.spark.sql.functions.{col, count, count_distinct, expr, lit, min, size, struct, sum, when}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType, IntegerType, LongType, MapType, NumericType, ShortType, StringType, StructType}
 
 import graft.catalog.{CatalogProvider, SparkCatalogProvider}
-import graft.engine.{GraftEngine, InvalidSqlError, QueryExecutor, QueryState}
+import graft.engine.{GraftEngine, InvalidSqlError, QueryExecutor, QueryResult, QueryState}
+import graft.ops.{Bloom, Classifier, CorpusBuild, Dedup, Layout, Multimodal, Profile, Sampling, Sketches, TextAnalysis}
 import graft.results.{ResultStream, ValueFormat}
 import graft.tables.Tables
 
@@ -38,11 +44,15 @@ import graft.tables.Tables
  *  - GET    /health                          (health.py:44, 503 on degraded)
  *  - GET    /ready                           (health.py:96, 503 until ready)
  *
- * Error bodies are FastAPI-shaped `{"detail": ...}` with the reference's
- * status codes (400 invalid SQL / bad id / bad page size, 404 unknown
- * query, 500 execution failure). Namespaces are dot-joined in paths (the
- * reference uses a unit-separator wire encoding for the same purpose —
- * see graft.catalog.NamespacePath).
+ * Error bodies are FastAPI-shaped `{"detail": ...}` under one contract:
+ * 400 for a caller error (invalid SQL, malformed JSON body, bad id, bad or
+ * missing parameter, unknown or ill-typed column), 404 for an unknown
+ * query, namespace or table, 413 for a request over a size cap, 500 for
+ * an engine failure, 503 while not ready. Handlers signal caller errors
+ * with `reject`; `route` is the one place that maps them, and the
+ * catalog's not-found exception, to a status and body.
+ * Namespaces are dot-joined in paths (the reference uses a unit-separator
+ * wire encoding for the same purpose — see graft.catalog.NamespacePath).
  *
  * Concurrency: requests run on a fixed pool; the engine layers are
  * thread-safe (SURVEY §7.5(6) — Spark inverts the reference's serialized
@@ -125,6 +135,25 @@ final class HttpFacade(
 
   // ---------------------------------------------------------------- routing
 
+  /** The `catalog/tables/{tp}/<op>` routes. Each runs after the one table
+    * resolver, so every op checks the dotted path (400) and existence
+    * (404) before any of its own parameters. */
+  private val tableOps: Map[String, (String, DataFrame, Params) => String] = Map(
+    "profile" -> profileRoute _, "balance" -> balanceRoute _,
+    "mixture" -> mixtureRoute _, "epoch-plan" -> epochPlanRoute _,
+    "dedup-sweep" -> dedupSweepRoute _,
+    "substring-dedup" -> substringDedupRoute _,
+    "data-card" -> dataCardRoute _,
+    "incremental-build" -> incrementalBuildRoute _,
+    "shard-manifest" -> shardManifestRoute _, "lsh-plan" -> lshPlanRoute _,
+    "dedup-probe" -> dedupProbeRoute _, "ann-search" -> annSearchRoute _,
+    "bm25-search" -> bm25SearchRoute _,
+    "contamination-search" -> contaminationSearchRoute _,
+    "hybrid-search" -> hybridSearchRoute _, "pq-search" -> pqSearchRoute _,
+    "index-audit" -> indexAuditRoute _, "classify" -> classifyRoute _,
+    "tokenize" -> tokenizeRoute _, "media-search" -> mediaSearchRoute _,
+    "box-search" -> boxSearchRoute _, "bloom-check" -> bloomCheckRoute _)
+
   private def route(ex: HttpExchange): Unit =
     try {
       val path = ex.getRequestURI.getPath
@@ -139,115 +168,71 @@ final class HttpFacade(
         case ("POST", List("api", "v1", "export", "arrow")) => exportArrow(ex)
         case ("GET", List("api", "v1", "catalog", "namespaces")) => namespaces(ex)
         case ("GET", List("api", "v1", "catalog", "release-audit")) =>
-          releaseAuditRoute(ex)
+          sendJson(ex, 200, releaseAuditRoute(params(ex)))
         case ("GET", List("api", "v1", "catalog", "namespaces", ns, "tables")) =>
           tables(ex, ns)
         case ("GET", List("api", "v1", "catalog", "tables", tp, "schema")) =>
           schema(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "profile")) =>
-          profileRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "balance")) =>
-          balanceRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "mixture")) =>
-          mixtureRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "epoch-plan")) =>
-          epochPlanRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "dedup-sweep")) =>
-          dedupSweepRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "substring-dedup")) =>
-          substringDedupRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "data-card")) =>
-          dataCardRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "incremental-build")) =>
-          incrementalBuildRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "shard-manifest")) =>
-          shardManifestRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "lsh-plan")) =>
-          lshPlanRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "dedup-probe")) =>
-          dedupProbeRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "ann-search")) =>
-          annSearchRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "bm25-search")) =>
-          bm25SearchRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp,
-            "contamination-search")) =>
-          contaminationSearchRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "hybrid-search")) =>
-          hybridSearchRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "pq-search")) =>
-          pqSearchRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "index-audit")) =>
-          indexAuditRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "classify")) =>
-          classifyRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "tokenize")) =>
-          tokenizeRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "media-search")) =>
-          mediaSearchRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "box-search")) =>
-          boxSearchRoute(ex, tp)
-        case ("GET", List("api", "v1", "catalog", "tables", tp, "bloom-check")) =>
-          bloomCheckRoute(ex, tp)
+        case ("GET", List("api", "v1", "catalog", "tables", tp, op))
+            if tableOps.contains(op) =>
+          sendJson(ex, 200, tableOps(op)(tp, resolve(tp), params(ex)))
         case ("GET", List("api", "v1", "catalog", "distinct-sketch")) =>
-          distinctSketchRoute(ex)
+          sendJson(ex, 200, distinctSketchRoute(params(ex)))
         case ("GET", List("api", "v1", "catalog", "quantile-sketch")) =>
-          quantileSketchRoute(ex)
+          sendJson(ex, 200, quantileSketchRoute(params(ex)))
         case ("GET", List("api", "v1", "catalog", "tables", tp)) =>
           tableDetails(ex, tp)
         case ("GET", List("health")) => health(ex)
         case ("GET", List("ready")) => ready(ex)
-        case _ => sendJson(ex, 404, detail("Not Found"))
+        case _ => reject(404, "Not Found")
       }
     } catch {
+      // the one error mapper. Only a genuine not-found is a 404; anything
+      // else (corrupt metadata JSON, IO failure) surfaces as the 500, not
+      // masquerading as a missing table
       case e: Throwable =>
-        try sendJson(ex, 500, detail(Option(e.getMessage).getOrElse("Internal error")))
-        catch { case _: Throwable => () }
+        try e match {
+          case r: HttpFacade.Reject => sendJson(ex, r.code, detail(r.msg))
+          case n: graft.catalog.NoSuchEntityException =>
+            sendJson(ex, 404, detail(n.getMessage))
+          case _ =>
+            sendJson(ex, 500, detail(Option(e.getMessage).getOrElse("Internal error")))
+        } catch { case _: Throwable => () }
     } finally ex.close()
 
-  // ---------------------------------------------------------------- handlers
+  // ------------------------------------------------------ lifecycle handlers
 
   private def execute(ex: HttpExchange): Unit = {
-    val body = Json.parseObject(readBody(ex))
-    body.get("sql") match {
-      case Some(sql: String) =>
-        val timeout = body.get("timeout").collect { case n: Long => n.toInt }
-        try {
-          val r = executor.execute(sql, timeout)
-          sendJson(ex, 200, Json.obj(
-            "query_id" -> r.queryId.toString, "status" -> r.state.value))
-        } catch {
-          case e: InvalidSqlError => sendJson(ex, 400, detail(e.getMessage))
-          case e: Exception => sendJson(ex, 500, detail(e.getMessage))
-        }
-      case _ => sendJson(ex, 400, detail("Field 'sql' is required"))
+    val body = jsonBody(ex)
+    val sql = body.get("sql").collect { case s: String => s }
+      .getOrElse(reject(400, "Field 'sql' is required"))
+    val timeout = body.get("timeout").collect { case n: Long => n.toInt }
+    val r = try executor.execute(sql, timeout) catch {
+      case e: InvalidSqlError => reject(400, e.getMessage)
+      case e: Exception => reject(500, e.getMessage)
     }
+    sendJson(ex, 200, Json.obj(
+      "query_id" -> r.queryId.toString, "status" -> r.state.value))
   }
 
-  private def status(ex: HttpExchange, id: String): Unit =
-    withQueryId(ex, id) { uuid =>
-      executor.getStatus(uuid) match {
-        case None => sendJson(ex, 404, detail(s"Query not found: $id"))
-        case Some(r) =>
-          val rows: Option[Long] =
-            if (r.state == QueryState.Completed) Some(r.metrics.rowsReturned)
-            else None
-          sendJson(ex, 200, Json.obj(
-            "query_id" -> id, "status" -> r.state.value,
-            "rows_processed" -> rows.orNull,
-            "error_message" -> r.errorMessage.orNull))
-      }
-    }
+  private def status(ex: HttpExchange, id: String): Unit = {
+    val r = query(id)
+    val rows: Option[Long] =
+      if (r.state == QueryState.Completed) Some(r.metrics.rowsReturned)
+      else None
+    sendJson(ex, 200, Json.obj(
+      "query_id" -> id, "status" -> r.state.value,
+      "rows_processed" -> rows.orNull,
+      "error_message" -> r.errorMessage.orNull))
+  }
 
   private def results(ex: HttpExchange, id: String): Unit = {
-    val q = queryParams(ex)
-    val pageSize = q.get("page_size").map(_.toInt).getOrElse(100)
-    val offset = q.get("offset").map(_.toInt).getOrElse(0)
-    if (!ResultStream.ValidPageSizes.contains(pageSize)) {
-      sendJson(ex, 400, detail("Invalid page_size. Must be one of: " +
-        ResultStream.ValidPageSizes.toSeq.sorted.mkString("[", ", ", "]")))
-      return
-    }
+    val p = params(ex)
+    val pageSize = p.int("page_size", 100)
+    val offset = p.int("offset", 0, lo = 0)
+    check(ResultStream.ValidPageSizes.contains(pageSize),
+      "Invalid page_size. Must be one of: " +
+        ResultStream.ValidPageSizes.toSeq.sorted.mkString("[", ", ", "]"))
     val lines = ResultStream.ndjsonAwait(
       () => parseUuid(id).flatMap(executor.getStatus), id, pageSize, offset)
     ex.getResponseHeaders.set("Content-Type", "application/x-ndjson")
@@ -257,51 +242,37 @@ final class HttpFacade(
     out.close()
   }
 
-  private def cancel(ex: HttpExchange, id: String): Unit =
-    withQueryId(ex, id) { uuid =>
-      executor.getStatus(uuid) match {
-        case None => sendJson(ex, 404, detail(s"Query not found: $id"))
-        case Some(_) =>
-          val was = executor.cancel(uuid)
-          val cur = executor.getStatus(uuid).map(_.state.value).getOrElse("unknown")
-          sendJson(ex, 200, Json.obj(
-            "query_id" -> id, "cancelled" -> was, "status" -> cur))
-      }
-    }
+  private def cancel(ex: HttpExchange, id: String): Unit = {
+    val uuid = query(id).queryId
+    val was = executor.cancel(uuid)
+    val cur = executor.getStatus(uuid).map(_.state.value).getOrElse("unknown")
+    sendJson(ex, 200, Json.obj(
+      "query_id" -> id, "cancelled" -> was, "status" -> cur))
+  }
 
-  private def cleanup(ex: HttpExchange, id: String): Unit =
-    withQueryId(ex, id) { uuid =>
-      executor.cleanup(uuid)
-      sendJson(ex, 200, Json.obj("query_id" -> id, "cleaned" -> true))
-    }
+  private def cleanup(ex: HttpExchange, id: String): Unit = {
+    executor.cleanup(queryUuid(id))
+    sendJson(ex, 200, Json.obj("query_id" -> id, "cleaned" -> true))
+  }
 
   private def exportCsv(ex: HttpExchange): Unit = {
-    val body = Json.parseObject(readBody(ex))
-    val sql = body.get("sql").collect { case s: String => s }
-    val queryId = body.get("query_id").collect { case s: String => s }
-    (sql, queryId) match {
+    val body = jsonBody(ex)
+    def str(k: String) = body.get(k).collect { case s: String => s }
+    (str("sql"), str("query_id")) match {
       case (None, None) =>
-        sendJson(ex, 400, detail("Either query_id or sql must be provided"))
+        reject(400, "Either query_id or sql must be provided")
       case (Some(_), Some(_)) =>
-        sendJson(ex, 400, detail("Provide either query_id or sql, not both"))
+        reject(400, "Provide either query_id or sql, not both")
       case (Some(s), None) =>
         try streamCsv(ex, ResultStream.csvForSql(executor, s))
         catch {
-          case e: InvalidSqlError => sendJson(ex, 400, detail(e.getMessage))
-          case _: Exception => sendJson(ex, 500, detail("Internal server error"))
+          case e: InvalidSqlError => reject(400, e.getMessage)
+          case _: Exception => reject(500, "Internal server error")
         }
       case (None, Some(qid)) =>
-        withQueryId(ex, qid) { uuid =>
-          executor.getStatus(uuid) match {
-            case None => sendJson(ex, 404, detail(s"Query not found: $qid"))
-            case Some(r) =>
-              try streamCsv(ex, ResultStream.csv(r))
-              catch {
-                case e: ResultStream.CsvExportError =>
-                  sendJson(ex, 400, detail(e.getMessage))
-              }
-          }
-        }
+        val r = query(qid)
+        try streamCsv(ex, ResultStream.csv(r))
+        catch { case e: ResultStream.CsvExportError => reject(400, e.getMessage) }
     }
   }
 
@@ -311,25 +282,22 @@ final class HttpFacade(
     * (buffered results live as rows; re-running the plan IS the columnar
     * path — batches stream executor → driver → socket one at a time). */
   private def exportArrow(ex: HttpExchange): Unit = {
-    val body = Json.parseObject(readBody(ex))
-    body.get("sql").collect { case s: String => s } match {
-      case None => sendJson(ex, 400, detail("sql must be provided"))
-      case Some(s) =>
-        try {
-          val df = executor.dataFrameForExport(s)
-          ex.getResponseHeaders.set("Content-Type",
-            "application/vnd.apache.arrow.stream")
-          ex.getResponseHeaders.set("Content-Disposition",
-            "attachment; filename=\"" +
-              ValueFormat.sanitizeFilename("query_results.arrow") + "\"")
-          ex.sendResponseHeaders(200, 0)
-          val out: OutputStream = ex.getResponseBody
-          org.apache.spark.sql.GraftArrow.writeIpcStream(df, out)
-          out.close()
-        } catch {
-          case e: InvalidSqlError => sendJson(ex, 400, detail(e.getMessage))
-          case _: Exception => sendJson(ex, 500, detail("Internal server error"))
-        }
+    val sql = jsonBody(ex).get("sql").collect { case s: String => s }
+      .getOrElse(reject(400, "sql must be provided"))
+    try {
+      val df = executor.dataFrameForExport(sql)
+      ex.getResponseHeaders.set("Content-Type",
+        "application/vnd.apache.arrow.stream")
+      ex.getResponseHeaders.set("Content-Disposition",
+        "attachment; filename=\"" +
+          ValueFormat.sanitizeFilename("query_results.arrow") + "\"")
+      ex.sendResponseHeaders(200, 0)
+      val out: OutputStream = ex.getResponseBody
+      org.apache.spark.sql.GraftArrow.writeIpcStream(df, out)
+      out.close()
+    } catch {
+      case e: InvalidSqlError => reject(400, e.getMessage)
+      case _: Exception => reject(500, "Internal server error")
     }
   }
 
@@ -344,63 +312,49 @@ final class HttpFacade(
     out.close()
   }
 
+  // -------------------------------------------------------- catalog handlers
+
   private def namespaces(ex: HttpExchange): Unit = {
     // ?parent= scopes the listing for lazy tree expansion (ref
     // catalog.py:41-103). The reference's wire form is unit-separator
     // (`accounting%1Ftax`); URI.getQuery percent-decodes, so the handler
     // sees the separator directly. A plain dotted path is accepted too (this façade's own
     // path convention).
-    val parent = queryParams(ex).get("parent").filter(_.nonEmpty).map { p =>
+    val parent = params(ex).get("parent").map { p =>
       if (p.contains(graft.catalog.NamespacePath.UnitSeparator))
         graft.catalog.NamespacePath.parse(p)
       else p.split("\\.").toSeq
     }
-    try sendJson(ex, 200, Json.obj(
+    sendJson(ex, 200, Json.obj(
       "namespaces" -> provider.listNamespaces(parent).map(_.mkString("."))))
-    catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
   }
 
   private def tableDetails(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      val d = provider.tableDetails(ns, table)
-      // Field names mirror the reference's TableDetails/Snapshot/
-      // PartitionSpec response models (ref models/catalog.py:69-192,
-      // routes/catalog.py:291-373): sort_order is always null there for
-      // now; format is fixed "ICEBERG".
-      def snapJson(sn: graft.catalog.Snapshot): Json.Raw = Json.Raw(Json.obj(
-        "sequence_number" -> sn.sequenceNumber,
-        "snapshot_id" -> sn.snapshotId,
-        "timestamp_ms" -> sn.timestampMs,
-        "manifest_list" -> sn.manifestList))
-      val spec = d.partitionSpec.map { p =>
-        Json.Raw(Json.obj("spec_id" -> p.specId, "fields" -> p.fields.map(f =>
-          Json.Raw(Json.obj("source_id" -> f.sourceId, "field_id" -> f.fieldId,
-            "name" -> f.name, "transform" -> f.transform)))))
-      }.orNull
-      sendJson(ex, 200, Json.obj(
-        "namespace" -> d.namespace,
-        "name" -> d.table,
-        "location" -> d.location,
-        "format" -> "ICEBERG",
-        "partition_spec" -> spec,
-        "sort_order" -> null,
-        "current_snapshot" -> d.currentSnapshot.map(snapJson).orNull,
-        "snapshots" -> d.snapshots.map(snapJson)))
-    } catch {
-      // only a genuine not-found is a 404; anything else (corrupt metadata
-      // JSON, IO failure) must surface as the route-level 500, not
-      // masquerade as a missing table
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+    val (ns, table) = tableName(tablePath)
+    val d = provider.tableDetails(ns, table)
+    // Field names mirror the reference's TableDetails/Snapshot/
+    // PartitionSpec response models (ref models/catalog.py:69-192,
+    // routes/catalog.py:291-373): sort_order is always null there for
+    // now; format is fixed "ICEBERG".
+    def snapJson(sn: graft.catalog.Snapshot): Json.Raw = Json.Raw(Json.obj(
+      "sequence_number" -> sn.sequenceNumber,
+      "snapshot_id" -> sn.snapshotId,
+      "timestamp_ms" -> sn.timestampMs,
+      "manifest_list" -> sn.manifestList))
+    val spec = d.partitionSpec.map { p =>
+      Json.Raw(Json.obj("spec_id" -> p.specId, "fields" -> p.fields.map(f =>
+        Json.Raw(Json.obj("source_id" -> f.sourceId, "field_id" -> f.fieldId,
+          "name" -> f.name, "transform" -> f.transform)))))
+    }.orNull
+    sendJson(ex, 200, Json.obj(
+      "namespace" -> d.namespace,
+      "name" -> d.table,
+      "location" -> d.location,
+      "format" -> "ICEBERG",
+      "partition_spec" -> spec,
+      "sort_order" -> null,
+      "current_snapshot" -> d.currentSnapshot.map(snapJson).orNull,
+      "snapshots" -> d.snapshots.map(snapJson)))
   }
 
   private def tables(ex: HttpExchange, ns: String): Unit = {
@@ -410,25 +364,18 @@ final class HttpFacade(
   }
 
   private def schema(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      val info = provider.tableSchema(ns, table)
-      sendJson(ex, 200, Json.obj(
-        "namespace" -> info.namespace.mkString("."),
-        "table" -> info.table,
-        "fields" -> info.fields.map(f => Json.Raw(Json.obj(
-          "name" -> f.name, "type" -> f.dataType,
-          "nullable" -> f.nullable,
-          "is_partition_column" -> f.isPartitionColumn)))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+    val (ns, table) = tableName(tablePath)
+    val info = provider.tableSchema(ns, table)
+    sendJson(ex, 200, Json.obj(
+      "namespace" -> info.namespace.mkString("."),
+      "table" -> info.table,
+      "fields" -> info.fields.map(f => Json.Raw(Json.obj(
+        "name" -> f.name, "type" -> f.dataType,
+        "nullable" -> f.nullable,
+        "is_partition_column" -> f.isPartitionColumn)))))
   }
+
+  // ------------------------------------------------- pipeline-op handlers
 
   /** Content profile of a catalog table: one row per column with exact
     * count / null / distinct / min-max / sum-len statistics
@@ -439,76 +386,59 @@ final class HttpFacade(
     * the result is one row per column, so the response is always tiny
     * even though the scan is table-sized — at warehouse scale submit the
     * same operator through the async query path instead. */
-  private def profileRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
+  private def profileRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val profilable = df.schema.fields.filter(_.dataType match {
+      case _: ArrayType | _: MapType | _: StructType => false
+      case _ => true
+    }).map(_.name).toSeq
+    val cols = p.get("columns")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(profilable)
+    // validate against the PROFILABLE set, not the full schema — an
+    // explicitly requested nested-type column must 400, not surface a
+    // raw AnalysisException as a 500
+    val unknown = cols.filterNot(profilable.contains)
+    check(unknown.isEmpty,
+      s"Unknown or non-profilable columns: ${unknown.mkString(", ")}")
+    check(cols.nonEmpty, "No profilable columns")
+    // ?approx=true swaps exact count-distinct for HLL++ — the sane
+    // default for warehouse-sized tables (see Profile.profile)
+    val approx = p.raw("approx").contains("true")
+    // ?group_by=<col> switches to the per-stratum report
+    // (Profile.profileBy); the group column must exist and may not be
+    // the only profiled column
+    val groupBy = p.raw("group_by")
+    groupBy.foreach { g =>
+      check(df.columns.contains(g), s"Unknown group_by column: $g")
+      check(cols.exists(_ != g), "group_by needs at least one other profiled column")
     }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val profilable = df.schema.fields.filter(_.dataType match {
-        case _: org.apache.spark.sql.types.ArrayType |
-             _: org.apache.spark.sql.types.MapType |
-             _: org.apache.spark.sql.types.StructType => false
-        case _ => true
-      }).map(_.name).toSeq
-      val cols = queryParams(ex).get("columns").filter(_.nonEmpty)
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(profilable)
-      // validate against the PROFILABLE set, not the full schema — an
-      // explicitly requested nested-type column must 400, not surface a
-      // raw AnalysisException as a 500
-      val unknown = cols.filterNot(profilable.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown or non-profilable columns: ${unknown.mkString(", ")}")); return
-      }
-      if (cols.isEmpty) {
-        sendJson(ex, 400, detail("No profilable columns")); return
-      }
-      // ?approx=true swaps exact count-distinct for HLL++ — the sane
-      // default for warehouse-sized tables (see Profile.profile)
-      val approx = queryParams(ex).get("approx").contains("true")
-      // ?group_by=<col> switches to the per-stratum report
-      // (Profile.profileBy); the group column must exist and may not be
-      // the only profiled column
-      val groupBy = queryParams(ex).get("group_by")
-      if (groupBy.exists(g => !df.columns.contains(g))) {
-        sendJson(ex, 400,
-          detail(s"Unknown group_by column: ${groupBy.get}")); return
-      }
-      if (groupBy.exists(g => cols.filterNot(_ == g).isEmpty)) {
-        sendJson(ex, 400,
-          detail("group_by needs at least one other profiled column")); return
-      }
-      val rows = groupBy match {
-        case Some(g) =>
-          graft.ops.Profile.profileBy(df, g, cols.filterNot(_ == g), approx)
-            .collect()
-        case None => graft.ops.Profile.profile(df, cols, approx).collect()
-      }
-      val off = if (groupBy.isDefined) 1 else 0
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "profile" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-          (Seq("column" -> (r.getString(off): Any),
-            "n_rows" -> r.getLong(off + 1),
-            "n_nulls" -> r.getLong(off + 2),
-            "n_distinct" -> r.getLong(off + 3),
-            "min" -> r.getString(off + 4),
-            "max" -> r.getString(off + 5),
-            "sum_len" -> (if (r.isNullAt(off + 6)) null
-                          else java.lang.Long.valueOf(r.getLong(off + 6)))) ++
-            groupBy.map(_ => "group" -> (r.getString(0): Any)).toSeq): _*)))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
+    val rows = groupBy match {
+      case Some(g) => Profile.profileBy(df, g, cols.filterNot(_ == g), approx).collect()
+      case None => Profile.profile(df, cols, approx).collect()
     }
+    val off = if (groupBy.isDefined) 1 else 0
+    Json.obj(
+      "table" -> tablePath,
+      "profile" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+        (Seq("column" -> (r.getString(off): Any),
+          "n_rows" -> r.getLong(off + 1),
+          "n_nulls" -> r.getLong(off + 2),
+          "n_distinct" -> r.getLong(off + 3),
+          "min" -> r.getString(off + 4),
+          "max" -> r.getString(off + 5),
+          "sum_len" -> (if (r.isNullAt(off + 6)) null
+                        else java.lang.Long.valueOf(r.getLong(off + 6)))) ++
+          groupBy.map(_ => "group" -> (r.getString(0): Any)).toSeq): _*))))
   }
+
+  /** Label-cardinality bound of the balance / mixture / epoch-plan
+    * responses: more distinct values than this is a caller error. */
+  private val MaxLabels = 1000
+
+  /** The mixture routes' budget: required, a long, >= 0 — one message. */
+  private def mixtureBudget(p: Params): Long =
+    p.raw("budget").flatMap(_.toLongOption).filter(_ >= 0)
+      .getOrElse(reject(400, "budget parameter is required and must be >= 0"))
 
   /** Training-mix allocation over a catalog table
     * (`?domain=<col>&weight=<col>&budget=<long>[&epochs=<int>]`):
@@ -516,86 +446,33 @@ final class HttpFacade(
     * caps (graft.ops.Sampling.mixtureAllocation — one keyed aggregation
     * plus a domain-count-sized closed form). Domain cardinality bounds
     * the response, same `maxLabels` contract as the balance route. */
-  private def mixtureRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val domain = qp.get("domain").filter(_.nonEmpty)
-      val weight = qp.get("weight").filter(_.nonEmpty)
-      val budget = qp.get("budget").flatMap(_.toLongOption)
-      val epochs = qp.get("epochs").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("epochs must be an integer")); return
-        case Some(Some(e)) => e
-        case None => 2
-      }
-      if (domain.isEmpty || weight.isEmpty) {
-        sendJson(ex, 400,
-          detail("domain and weight parameters are required")); return
-      }
-      if (budget.isEmpty || budget.exists(_ < 0)) {
-        sendJson(ex, 400,
-          detail("budget parameter is required and must be >= 0")); return
-      }
-      if (epochs < 1) {
-        sendJson(ex, 400, detail("epochs must be >= 1")); return
-      }
-      val unknown = Seq(domain.get, weight.get)
-        .filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      val numeric = df.schema(weight.get).dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType]
-      if (!numeric) {
-        sendJson(ex, 400,
-          detail(s"Weight column ${weight.get} is not numeric")); return
-      }
-      // same convention as balanceRoute: a non-groupable domain column
-      // is a caller error, not a surfaced AnalysisException
-      val groupable = df.schema(domain.get).dataType match {
-        case _: org.apache.spark.sql.types.MapType => false
-        case _ => true
-      }
-      if (!groupable) {
-        sendJson(ex, 400, detail(
-          s"Column ${domain.get} is not groupable (map type)")); return
-      }
-      val maxLabels = 1000
-      val rows = graft.ops.Sampling.mixtureAllocation(df, domain.get,
-          weight.get, org.apache.spark.sql.functions.expr(s"avail * $epochs"),
-          budget.get)
-        .limit(maxLabels + 1).collect()
-      if (rows.length > maxLabels) {
-        sendJson(ex, 400, detail(
-          s"Column ${domain.get} has more than $maxLabels distinct " +
-            "values — mixture reports are for domain-like columns")); return
-      }
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "domain" -> domain.get,
-        "weight" -> weight.get,
-        "budget" -> budget.get,
-        "epochs_cap" -> epochs.toLong,
-        "allocation" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-          "domain" -> (if (r.isNullAt(0)) null else String.valueOf(r.get(0))),
-          "avail" -> r.getLong(1),
-          "cap" -> r.getLong(2),
-          "alloc" -> r.getLong(3),
-          "epochs_ppm" -> r.getLong(4))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+  private def mixtureRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val epochs = p.int("epochs", 2)
+    val Seq(domain, weight) = p.required("domain", "weight")
+    val budget = mixtureBudget(p)
+    check(epochs >= 1, "epochs must be >= 1")
+    knownColumns(df, domain, weight)
+    numericCol(df, weight, "Weight")
+    // same convention as balanceRoute: a non-groupable domain column
+    // is a caller error, not a surfaced AnalysisException
+    groupableCol(df, domain)
+    val rows = Sampling.mixtureAllocation(df, domain, weight,
+        expr(s"avail * $epochs"), budget)
+      .limit(MaxLabels + 1).collect()
+    check(rows.length <= MaxLabels, s"Column $domain has more than " +
+      s"$MaxLabels distinct values — mixture reports are for domain-like columns")
+    Json.obj(
+      "table" -> tablePath,
+      "domain" -> domain,
+      "weight" -> weight,
+      "budget" -> budget,
+      "epochs_cap" -> epochs.toLong,
+      "allocation" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+        "domain" -> optString(r, 0),
+        "avail" -> r.getLong(1),
+        "cap" -> r.getLong(2),
+        "alloc" -> r.getLong(3),
+        "epochs_ppm" -> r.getLong(4)))))
   }
 
   /** Dedup-threshold sensitivity sweep over any catalog table
@@ -607,83 +484,35 @@ final class HttpFacade(
     * row per threshold (the audit a curation UI reads before committing
     * to a threshold). Validation follows the mixture-route conventions:
     * 400 for missing/unknown/ill-typed params, 404 for unknown tables. */
-  private def dedupSweepRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
+  private def dedupSweepRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val Seq(text, id) = p.required("text", "id")
+    knownColumns(df, text, id)
+    stringCol(df, text)
+    integralCol(df, id)
+    val thresholds = p.raw("thresholds").fold(Seq(0.5, 0.6, 0.7, 0.8, 0.9)) { raw =>
+      val parsed = raw.split(",").toSeq.map(_.trim.toDoubleOption)
+      check(parsed.nonEmpty && parsed.forall(_.isDefined),
+        "thresholds must be a comma-separated list of numbers")
+      val ts = parsed.flatten
+      check(!ts.exists(t => t <= 0.0 || t > 1.0) && ts.length <= 16,
+        "thresholds must be in (0, 1], at most 16 values")
+      ts
     }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val textCol = qp.get("text").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (textCol.isEmpty || idCol.isEmpty) {
-        sendJson(ex, 400,
-          detail("text and id parameters are required")); return
-      }
-      val unknown = Seq(textCol.get, idCol.get).filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (df.schema(textCol.get).dataType !=
-          org.apache.spark.sql.types.StringType) {
-        sendJson(ex, 400,
-          detail(s"Text column ${textCol.get} is not a string column"))
-        return
-      }
-      val integral = df.schema(idCol.get).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (!integral) {
-        sendJson(ex, 400,
-          detail(s"Id column ${idCol.get} is not an integral column"))
-        return
-      }
-      val thresholds = qp.get("thresholds") match {
-        case None => Seq(0.5, 0.6, 0.7, 0.8, 0.9)
-        case Some(raw) =>
-          val parsed = raw.split(",").toSeq.map(_.trim).map(_.toDoubleOption)
-          if (parsed.exists(_.isEmpty) || parsed.isEmpty) {
-            sendJson(ex, 400, detail(
-              "thresholds must be a comma-separated list of numbers"))
-            return
-          }
-          val ts = parsed.flatten
-          if (ts.exists(t => t <= 0.0 || t > 1.0) || ts.length > 16) {
-            sendJson(ex, 400, detail(
-              "thresholds must be in (0, 1], at most 16 values")); return
-          }
-          ts
-      }
-      // thresholdSweep localCheckpoints its shared pair set — release it
-      // under the op-sweep discipline (withOpSweep)
-      val rows = withOpSweep {
-        graft.ops.Dedup.thresholdSweep(df, textCol.get, idCol.get,
-          thresholds).collect()
-      }
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "text" -> textCol.get,
-        "id" -> idCol.get,
-        "sweep" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-          "threshold" -> r.getDouble(0),
-          "n_pairs" -> r.getLong(1),
-          "n_docs_touched" -> r.getLong(2),
-          "n_dropped" -> r.getLong(3),
-          "drop_ppm" -> r.getLong(4))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
+    // thresholdSweep localCheckpoints its shared pair set — release it
+    // under the op-sweep discipline (withOpSweep)
+    val rows = withOpSweep {
+      Dedup.thresholdSweep(df, text, id, thresholds).collect()
     }
+    Json.obj(
+      "table" -> tablePath,
+      "text" -> text,
+      "id" -> id,
+      "sweep" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+        "threshold" -> r.getDouble(0),
+        "n_pairs" -> r.getLong(1),
+        "n_docs_touched" -> r.getLong(2),
+        "n_dropped" -> r.getLong(3),
+        "drop_ppm" -> r.getLong(4)))))
   }
 
   /** Substring-level (ExactSubstr) dedup excision audit over any catalog
@@ -698,79 +527,17 @@ final class HttpFacade(
     * not a payload (the epoch-plan route's argument). Validation follows
     * the dedup-sweep conventions: 400 for missing/unknown/ill-typed
     * params, 404 for unknown tables. */
-  private def substringDedupRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val textCol = qp.get("text").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (textCol.isEmpty || idCol.isEmpty) {
-        sendJson(ex, 400,
-          detail("text and id parameters are required")); return
-      }
-      val unknown = Seq(textCol.get, idCol.get).filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (df.schema(textCol.get).dataType !=
-          org.apache.spark.sql.types.StringType) {
-        sendJson(ex, 400,
-          detail(s"Text column ${textCol.get} is not a string column"))
-        return
-      }
-      val integral = df.schema(idCol.get).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (!integral) {
-        sendJson(ex, 400,
-          detail(s"Id column ${idCol.get} is not an integral column"))
-        return
-      }
-      val anchor = qp.get("anchor").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("anchor must be an integer")); return
-        case Some(Some(a)) => a
-        case None => 5
-      }
-      if (anchor < 1 || anchor > 64) {
-        sendJson(ex, 400, detail("anchor must be between 1 and 64")); return
-      }
-      val maxDocFreq = qp.get("max_doc_freq").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("max_doc_freq must be an integer")); return
-        case Some(Some(m)) => m
-        case None => 1
-      }
-      if (maxDocFreq < 1) {
-        sendJson(ex, 400, detail("max_doc_freq must be >= 1")); return
-      }
-      val limit = qp.get("limit").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("limit must be an integer")); return
-        case Some(Some(l)) => l
-        case None => 100
-      }
-      if (limit < 0 || limit > 1000) {
-        sendJson(ex, 400,
-          detail("limit must be between 0 and 1000")); return
-      }
-      import org.apache.spark.sql.functions.{col, count, lit, sum, when}
-      withOpSweep {
-      val rep = graft.ops.Dedup.substringDedup(df, textCol.get, idCol.get,
-        anchor, maxDocFreq).drop("kept_text").persist()
+  private def substringDedupRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val Seq(text, id) = p.required("text", "id")
+    knownColumns(df, text, id)
+    stringCol(df, text)
+    integralCol(df, id)
+    val anchor = p.int("anchor", 5, 1, 64)
+    val maxDocFreq = p.int("max_doc_freq", 1, 1)
+    val limit = p.int("limit", 100, 0, 1000)
+    withOpSweep {
+      val rep = Dedup.substringDedup(df, text, id, anchor, maxDocFreq)
+        .drop("kept_text").persist()
       try {
         val r = rep.agg(
           count(lit(1)).as("n_docs"),
@@ -780,172 +547,77 @@ final class HttpFacade(
           sum(col("n_dropped")).as("total_dropped"),
           sum(col("n_spans")).as("total_spans")).collect()(0)
         def lg(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
-        val (nDocs, nAffected) = (lg(0), lg(1))
-        val (totWords, totDropped, totSpans) = (lg(2), lg(3), lg(4))
-        val dropPpm =
-          if (totWords == 0L) 0L else 1000000L * totDropped / totWords
+        val (totWords, totDropped) = (lg(2), lg(3))
         val sample = rep
           .orderBy(col("n_dropped").desc, col("id")).limit(limit).collect()
-        sendJson(ex, 200, Json.obj(
+        Json.obj(
           "table" -> tablePath,
-          "text" -> textCol.get,
-          "id" -> idCol.get,
+          "text" -> text,
+          "id" -> id,
           "anchor_words" -> anchor.toLong,
           "max_doc_freq" -> maxDocFreq.toLong,
-          "n_docs" -> nDocs,
-          "n_docs_affected" -> nAffected,
+          "n_docs" -> lg(0),
+          "n_docs_affected" -> lg(1),
           "total_words" -> totWords,
           "total_dropped" -> totDropped,
-          "total_spans" -> totSpans,
-          "drop_ppm" -> dropPpm,
+          "total_spans" -> lg(4),
+          "drop_ppm" -> (if (totWords == 0L) 0L else 1000000L * totDropped / totWords),
           "most_affected" -> sample.toSeq.map(row => Json.Raw(Json.obj(
             "id" -> String.valueOf(row.get(0)),
             "n_words" -> row.getLong(1),
             "n_dropped" -> row.getLong(2),
-            "n_spans" -> row.getLong(3))))))
+            "n_spans" -> row.getLong(3)))))
       } finally rep.unpersist()
-      }
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
     }
   }
 
-  /** Release data card over any catalog table
-    * (`?text=<col>&id=<col>&domain=<col>&length=<col>[&budget=<long>]
-    * [&epochs=<int>]`): graft.ops.CorpusBuild — runs the full p14
-    * corpus-build composition (filter → split → decontaminate → dedup →
-    * mixture/epochs → pack → shuffle) and serves the x09 one-row
-    * rollup: corpus size, survivors, per-reason rejection counts, and
-    * the mix realization (docs, copies, tokens, bins, max position).
-    * The per-(doc, copy) plan itself is a dataset to write, not a
-    * payload (the epoch-plan route's argument) — the card is the
-    * UI-sized summary. Validation follows the substring-dedup
-    * conventions. */
   /** The corpus-build parameter set shared by the data-card and
     * incremental-build routes. */
   private case class BuildParams(
       text: String, id: String, domain: String, length: String,
       budget: Long, epochs: Int, crossT: Double, dedupT: Double,
-      minQ: Double, langs: Seq[String])
+      minQ: Double, langs: Seq[String]) {
+    def columns: Seq[(String, Any)] =
+      Seq("text" -> text, "id" -> id, "domain" -> domain, "length" -> length)
+    def knobs: Seq[(String, Any)] = Seq("epochs_cap" -> epochs.toLong,
+      "cross_threshold" -> crossT, "dedup_threshold" -> dedupT,
+      "min_quality" -> minQ, "langs" -> langs.mkString(","))
+    def corpusBuild(df: DataFrame, spend: Long): DataFrame =
+      CorpusBuild.corpusBuild(df, text, id, domain, length,
+        allowedLangs = langs, minQuality = minQ, crossThreshold = crossT,
+        dedupThreshold = dedupT, epochCap = epochs, budget = spend)
+  }
 
   /** Parse + validate the corpus-build request surface (columns, budget,
     * epochs, curation thresholds, langs, and the max_rows scale guard)
-    * against `df`'s schema. Sends the 400/413 response itself and
-    * returns None when the request was rejected; validation order is the
-    * data-card route's original order (pinned by HttpFacadeSpec).
-    * `budgetDefault` differs per route: the full build spends 70 k by
-    * default, an increment spends its own 20 k. */
-  private def buildParams(ex: HttpExchange,
-      df: org.apache.spark.sql.DataFrame,
-      budgetDefault: Long): Option[BuildParams] = {
-    val qp = queryParams(ex)
-    val textCol = qp.get("text").filter(_.nonEmpty)
-    val idCol = qp.get("id").filter(_.nonEmpty)
-    val domainCol = qp.get("domain").filter(_.nonEmpty)
-    val lengthCol = qp.get("length").filter(_.nonEmpty)
-    if (textCol.isEmpty || idCol.isEmpty || domainCol.isEmpty ||
-        lengthCol.isEmpty) {
-      sendJson(ex, 400, detail(
-        "text, id, domain and length parameters are required")); return None
-    }
-    val unknown = Seq(textCol.get, idCol.get, domainCol.get,
-      lengthCol.get).filterNot(df.columns.contains)
-    if (unknown.nonEmpty) {
-      sendJson(ex, 400,
-        detail(s"Unknown columns: ${unknown.mkString(", ")}")); return None
-    }
-    if (df.schema(textCol.get).dataType !=
-        org.apache.spark.sql.types.StringType) {
-      sendJson(ex, 400,
-        detail(s"Text column ${textCol.get} is not a string column"))
-      return None
-    }
-    val integral = df.schema(idCol.get).dataType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    if (!integral) {
-      sendJson(ex, 400,
-        detail(s"Id column ${idCol.get} is not an integral column"))
-      return None
-    }
-    if (!df.schema(lengthCol.get).dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType]) {
-      sendJson(ex, 400,
-        detail(s"Length column ${lengthCol.get} is not numeric")); return None
-    }
-    val groupable = df.schema(domainCol.get).dataType match {
-      case _: org.apache.spark.sql.types.MapType => false
-      case _ => true
-    }
-    if (!groupable) {
-      sendJson(ex, 400, detail(
-        s"Column ${domainCol.get} is not groupable (map type)")); return None
-    }
-    val budget = qp.get("budget").map(_.toLongOption) match {
-      case Some(None) => sendJson(ex, 400,
-        detail("budget must be an integer")); return None
-      case Some(Some(b)) => b
-      case None => budgetDefault
-    }
-    if (budget < 0) {
-      sendJson(ex, 400, detail("budget must be >= 0")); return None
-    }
-    val epochs = qp.get("epochs").map(_.toIntOption) match {
-      case Some(None) => sendJson(ex, 400,
-        detail("epochs must be an integer")); return None
-      case Some(Some(e)) => e
-      case None => 2
-    }
-    if (epochs < 1) {
-      sendJson(ex, 400, detail("epochs must be >= 1")); return None
-    }
+    * against `df`'s schema; validation order is the data-card route's
+    * original order (pinned by HttpFacadeSpec). `budgetDefault` differs
+    * per route: the full build spends 70 k by default, an increment
+    * spends its own 20 k. */
+  private def buildParams(df: DataFrame, p: Params,
+      budgetDefault: Long): BuildParams = {
+    val Seq(text, id, domain, length) =
+      p.required("text", "id", "domain", "length")
+    knownColumns(df, text, id, domain, length)
+    stringCol(df, text)
+    integralCol(df, id)
+    numericCol(df, length, "Length")
+    groupableCol(df, domain)
+    val budget = p.long("budget", budgetDefault, 0)
+    val epochs = p.int("epochs", 2, 1)
     // curation knobs: the x08/x10 tuning loop drives the capstone
     // through these — a threshold sweep over the card is how a
     // release picks its dedup configuration
-    def thresholdParam(name: String, dflt: Double): Option[Double] =
-      qp.get(name).map(_.toDoubleOption) match {
-        case Some(None) =>
-          sendJson(ex, 400, detail(s"$name must be a number")); None
-        case Some(Some(t)) if t.isNaN || t <= 0.0 || t > 1.0 =>
-          sendJson(ex, 400, detail(s"$name must be in (0, 1]")); None
-        case Some(Some(t)) => Some(t)
-        case None => Some(dflt)
-      }
-    val crossTOpt = thresholdParam("cross_threshold", 0.5)
-    if (crossTOpt.isEmpty) return None
-    val dedupTOpt = thresholdParam("dedup_threshold", 0.7)
-    if (dedupTOpt.isEmpty) return None
-    val minQOpt = thresholdParam("min_quality", 0.6)
-    if (minQOpt.isEmpty) return None
-    val langs = qp.get("langs") match {
-      case None => Seq("en", "de", "fr")
-      case Some(raw) =>
-        val parsed = raw.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-        if (parsed.isEmpty) {
-          sendJson(ex, 400, detail(
-            "langs must be a non-empty comma-separated list")); return None
-        }
-        parsed
-    }
+    val crossT = p.fraction("cross_threshold", 0.5)
+    val dedupT = p.fraction("dedup_threshold", 0.7)
+    val minQ = p.fraction("min_quality", 0.6)
+    val langs = p.list("langs", Seq("en", "de", "fr"))
     // audit-scale guard: both routes run a FULL p14-shaped composition
     // (two similarity joins, token counting, transitive dedup)
     // synchronously inside a GET — refuse corpora beyond the cap so one
     // request can't pin the session for minutes. The full per-(doc,
     // copy) plan at scale is a dataset JOB, not a payload.
-    val maxRows = qp.get("max_rows").map(_.toLongOption) match {
-      case Some(None) => sendJson(ex, 400,
-        detail("max_rows must be an integer")); return None
-      case Some(Some(m)) => m
-      case None => 100000L
-    }
-    if (maxRows < 1) {
-      sendJson(ex, 400, detail("max_rows must be >= 1")); return None
-    }
+    val maxRows = p.long("max_rows", 100000L, 1)
     // the guard itself must not scan the corpus to decide whether
     // scanning is too expensive: a LIMIT-ed count short-circuits the
     // scan at maxRows+1 rows (CollectLimit takes partitions
@@ -960,57 +632,36 @@ final class HttpFacade(
       if (maxRows < Int.MaxValue.toLong)
         df.limit(maxRows.toInt + 1).count() > maxRows
       else df.count() > maxRows
-    if (over) {
-      sendJson(ex, 413, detail(s"Table has more than $maxRows rows, " +
-        s"over the data-card cap (raise max_rows to override)")); return None
-    }
-    Some(BuildParams(textCol.get, idCol.get, domainCol.get, lengthCol.get,
-      budget, epochs, crossTOpt.get, dedupTOpt.get, minQOpt.get, langs))
+    if (over) reject(413, s"Table has more than $maxRows rows, " +
+      s"over the data-card cap (raise max_rows to override)")
+    BuildParams(text, id, domain, length, budget, epochs, crossT, dedupT,
+      minQ, langs)
   }
 
-  private def dataCardRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
+  /** A one-row data card rendered as its long-valued fields. */
+  private def cardFields(card: Row): Seq[(String, Any)] =
+    card.schema.fieldNames.toSeq.zipWithIndex.map { case (f, i) => f -> card.getLong(i) }
+
+  /** Release data card over any catalog table
+    * (`?text=<col>&id=<col>&domain=<col>&length=<col>[&budget=<long>]
+    * [&epochs=<int>]`): graft.ops.CorpusBuild — runs the full p14
+    * corpus-build composition (filter → split → decontaminate → dedup →
+    * mixture/epochs → pack → shuffle) and serves the x09 one-row
+    * rollup: corpus size, survivors, per-reason rejection counts, and
+    * the mix realization (docs, copies, tokens, bins, max position).
+    * The per-(doc, copy) plan itself is a dataset to write, not a
+    * payload (the epoch-plan route's argument) — the card is the
+    * UI-sized summary. Validation follows the substring-dedup
+    * conventions. */
+  private def dataCardRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val b = buildParams(df, p, budgetDefault = 70000L)
+    // release the composition's localCheckpoints when the card is done
+    // (op-sweep discipline: see withOpSweep)
+    val card = withOpSweep {
+      CorpusBuild.dataCard(b.corpusBuild(df, b.budget)).collect()(0)
     }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val p = buildParams(ex, df, budgetDefault = 70000L) match {
-        case None => return
-        case Some(v) => v
-      }
-      // release the composition's localCheckpoints when the card is done
-      // (op-sweep discipline: see withOpSweep)
-      val card = withOpSweep {
-        graft.ops.CorpusBuild.dataCard(
-          graft.ops.CorpusBuild.corpusBuild(df, p.text, p.id,
-            p.domain, p.length, allowedLangs = p.langs,
-            minQuality = p.minQ, crossThreshold = p.crossT,
-            dedupThreshold = p.dedupT, epochCap = p.epochs,
-            budget = p.budget)).collect()(0)
-      }
-      val fields = card.schema.fieldNames.zipWithIndex
-      sendJson(ex, 200, Json.obj(Seq[(String, Any)](
-        "table" -> tablePath,
-        "text" -> p.text,
-        "id" -> p.id,
-        "domain" -> p.domain,
-        "length" -> p.length,
-        "budget" -> p.budget,
-        "epochs_cap" -> p.epochs.toLong,
-        "cross_threshold" -> p.crossT,
-        "dedup_threshold" -> p.dedupT,
-        "min_quality" -> p.minQ,
-        "langs" -> p.langs.mkString(",")) ++
-        fields.map { case (f, i) => f -> card.getLong(i) }: _*))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+    Json.obj(Seq[(String, Any)]("table" -> tablePath) ++ b.columns ++
+      Seq("budget" -> b.budget) ++ b.knobs ++ cardFields(card): _*)
   }
 
   /** Incremental corpus build over any catalog table
@@ -1044,106 +695,48 @@ final class HttpFacade(
     * corpus side contributes only the id-joined eval/canonical text
     * reads, but the guard stays conservative — the delta is unbounded
     * by the split point). */
-  private def incrementalBuildRoute(ex: HttpExchange,
-      tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
+  private def incrementalBuildRoute(tablePath: String, df: DataFrame,
+      p: Params): String = {
+    val b = buildParams(df, p, budgetDefault = 20000L)
+    val deltaFrom = p.long("delta_from", reject(400, "delta_from parameter is required"))
+    val existingBudget = p.long("existing_budget", 70000L, 0)
+    val existingTable = p.get("existing").map { path =>
+      check(!p.contains("existing_budget"), "Provide either existing (a " +
+        "stored build table) or existing_budget (an inline recompute), not both")
+      stored(path, "existing build", Seq("id", "kept", "reason", "split",
+        "w", "copy", "pack_shard", "pack_bin", "pos"))
     }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val p = buildParams(ex, df, budgetDefault = 20000L) match {
-        case None => return
-        case Some(v) => v
-      }
-      val qp = queryParams(ex)
-      val deltaFrom = qp.get("delta_from").map(_.toLongOption) match {
-        case Some(Some(v)) => v
-        case Some(None) => sendJson(ex, 400,
-          detail("delta_from must be an integer")); return
-        case None => sendJson(ex, 400,
-          detail("delta_from parameter is required")); return
-      }
-      val existingBudget =
-        qp.get("existing_budget").map(_.toLongOption) match {
-          case Some(None) => sendJson(ex, 400,
-            detail("existing_budget must be an integer")); return
-          case Some(Some(b)) if b < 0 => sendJson(ex, 400,
-            detail("existing_budget must be >= 0")); return
-          case Some(Some(b)) => b
-          case None => 70000L
-        }
-      val existingTable = qp.get("existing").filter(_.nonEmpty) match {
-        case None => None
-        case Some(path) =>
-          if (qp.contains("existing_budget")) {
-            sendJson(ex, 400, detail("Provide either existing (a stored " +
-              "build table) or existing_budget (an inline recompute), " +
-              "not both")); return
-          }
-          loadStored(ex, path, "existing build",
-            Seq("id", "kept", "reason", "split", "w", "copy",
-              "pack_shard", "pack_bin", "pos")) match {
-            case None => return
-            case some => some
-          }
-      }
-      import org.apache.spark.sql.functions.{col, count, when}
-      val corpus = df.filter(col(p.id) < deltaFrom)
-      val delta = df.filter(col(p.id) >= deltaFrom)
-      val (card, existingCopies) = withOpSweep {
-        // the stored form reads shipped state as-is: its consumers
-        // (eval ids, canonicals, position offset, existing_copies) are
-        // each a pruned scan of a narrow table, checkpointed at the
-        // interface inside incrementalBuild. The recompute form
-        // checkpoints the live build ONCE — an un-checkpointed plan
-        // would re-run the whole existing pipeline per consumer
-        val existing = existingTable.getOrElse(
-          org.apache.spark.sql.GraftCheckpoint.freshStats(
-            graft.ops.CorpusBuild.corpusBuild(corpus, p.text, p.id,
-              p.domain, p.length, allowedLangs = p.langs,
-              minQuality = p.minQ, crossThreshold = p.crossT,
-              dedupThreshold = p.dedupT, epochCap = p.epochs,
-              budget = existingBudget)))
-        val incr = graft.ops.CorpusBuild.incrementalBuild(
-          existing, corpus, delta, p.text, p.id, p.domain, p.length,
-          allowedLangs = p.langs, minQuality = p.minQ,
-          crossThreshold = p.crossT, dedupThreshold = p.dedupT,
-          epochCap = p.epochs, deltaBudget = p.budget)
-        (graft.ops.CorpusBuild.dataCard(incr).collect()(0),
-          existing.agg(count(when(col("copy").isNotNull, 1)))
-            .collect()(0).getLong(0))
-      }
-      val fields = card.schema.fieldNames.zipWithIndex
-      sendJson(ex, 200, Json.obj(Seq[(String, Any)](
-        "table" -> tablePath,
-        "text" -> p.text,
-        "id" -> p.id,
-        "domain" -> p.domain,
-        "length" -> p.length,
-        "delta_from" -> deltaFrom,
-        "budget" -> p.budget,
-        "existing" -> qp.get("existing").filter(_.nonEmpty).orNull,
-        // null when the state came from a stored table — no recompute
-        // happened, so no budget parameterized it
-        "existing_budget" ->
-          (if (existingTable.isDefined) null
-           else java.lang.Long.valueOf(existingBudget)),
-        "epochs_cap" -> p.epochs.toLong,
-        "cross_threshold" -> p.crossT,
-        "dedup_threshold" -> p.dedupT,
-        "min_quality" -> p.minQ,
-        "langs" -> p.langs.mkString(","),
-        "existing_copies" -> existingCopies) ++
-        fields.map { case (f, i) => f -> card.getLong(i) }: _*))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
+    val corpus = df.filter(col(b.id) < deltaFrom)
+    val delta = df.filter(col(b.id) >= deltaFrom)
+    val (card, existingCopies) = withOpSweep {
+      // the stored form reads shipped state as-is: its consumers
+      // (eval ids, canonicals, position offset, existing_copies) are
+      // each a pruned scan of a narrow table, checkpointed at the
+      // interface inside incrementalBuild. The recompute form
+      // checkpoints the live build ONCE — an un-checkpointed plan
+      // would re-run the whole existing pipeline per consumer
+      val existing = existingTable.getOrElse(
+        org.apache.spark.sql.GraftCheckpoint.freshStats(
+          b.corpusBuild(corpus, existingBudget)))
+      val incr = CorpusBuild.incrementalBuild(
+        existing, corpus, delta, b.text, b.id, b.domain, b.length,
+        allowedLangs = b.langs, minQuality = b.minQ,
+        crossThreshold = b.crossT, dedupThreshold = b.dedupT,
+        epochCap = b.epochs, deltaBudget = b.budget)
+      (CorpusBuild.dataCard(incr).collect()(0),
+        existing.agg(count(when(col("copy").isNotNull, 1)))
+          .collect()(0).getLong(0))
     }
+    Json.obj(Seq[(String, Any)]("table" -> tablePath) ++ b.columns ++ Seq(
+      "delta_from" -> deltaFrom,
+      "budget" -> b.budget,
+      "existing" -> p.get("existing").orNull,
+      // null when the state came from a stored table — no recompute
+      // happened, so no budget parameterized it
+      "existing_budget" ->
+        (if (existingTable.isDefined) null
+         else java.lang.Long.valueOf(existingBudget))) ++
+      b.knobs ++ Seq("existing_copies" -> existingCopies) ++ cardFields(card): _*)
   }
 
   /** Release-shard manifest over any catalog table
@@ -1159,59 +752,15 @@ final class HttpFacade(
     * (n_shards, n_docs, w_total) plus the first `limit` shard rows in
     * shard order (default 1000, cap 10000). Validation follows the
     * data-card conventions. */
-  private def shardManifestRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      val weight = qp.get("weight").filter(_.nonEmpty)
-      if (idCol.isEmpty || weight.isEmpty) {
-        sendJson(ex, 400,
-          detail("id and weight parameters are required")); return
-      }
-      val budget = qp.get("budget").map(_.toLongOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("budget must be an integer")); return
-        case Some(Some(b)) => b
-        case None => sendJson(ex, 400,
-          detail("budget parameter is required")); return
-      }
-      if (budget < 1) {
-        sendJson(ex, 400, detail("budget must be >= 1")); return
-      }
-      val seed = qp.getOrElse("seed", "release")
-      val limit = qp.get("limit").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("limit must be an integer")); return
-        case Some(Some(l)) => l
-        case None => 1000
-      }
-      if (limit < 0 || limit > 10000) {
-        sendJson(ex, 400,
-          detail("limit must be between 0 and 10000")); return
-      }
-      val unknown = Seq(idCol.get, weight.get).filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (!df.schema(weight.get).dataType
-          .isInstanceOf[org.apache.spark.sql.types.NumericType]) {
-        sendJson(ex, 400,
-          detail(s"Weight column ${weight.get} is not numeric")); return
-      }
-      import org.apache.spark.sql.functions.{col, count, lit, sum}
-      withOpSweep {
-      val manifest = graft.ops.Sampling.shardManifest(df, idCol.get,
-        weight.get, seed, budget).persist()
+  private def shardManifestRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val Seq(id, weight) = p.required("id", "weight")
+    val budget = p.long("budget", reject(400, "budget parameter is required"), 1)
+    val seed = p.getOrElse("seed", "release")
+    val limit = p.int("limit", 1000, 0, 10000)
+    knownColumns(df, id, weight)
+    numericCol(df, weight, "Weight")
+    withOpSweep {
+      val manifest = Sampling.shardManifest(df, id, weight, seed, budget).persist()
       try {
         val tot = manifest.agg(count(lit(1)).as("n_shards"),
           sum(col("n_docs")).as("n_docs"),
@@ -1220,10 +769,10 @@ final class HttpFacade(
         // explicit sort — an unordered limit over the manifest join
         // output returns different shards run-to-run
         val rows = manifest.orderBy(col("shard")).limit(limit).collect()
-        sendJson(ex, 200, Json.obj(
+        Json.obj(
           "table" -> tablePath,
-          "id" -> idCol.get,
-          "weight" -> weight.get,
+          "id" -> id,
+          "weight" -> weight,
           "budget" -> budget,
           "seed" -> seed,
           "n_shards" -> (if (tot.isNullAt(0)) 0L else tot.getLong(0)),
@@ -1240,14 +789,154 @@ final class HttpFacade(
             // client) would silently round it and break the documented
             // recompute-to-audit contract
             "etag" -> r.getLong(5).toString,
-            "fill_ppm" -> r.getLong(6))))))
+            "fill_ppm" -> r.getLong(6)))))
       } finally manifest.unpersist()
-      }
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
     }
   }
+
+  /** LSH index-shape planner over any catalog table
+    * (`?text=<col>&id=<col>[&num_hashes=128][&floor=0.5]
+    * [&target_min_ppm=950000]`): graft.ops.Dedup.lshPlan priced on the
+    * corpus's OWN verified >= floor pairs, plus Dedup.pickLsh's
+    * decision — the cheapest bands x rows factorization of the
+    * num_hashes signature whose WORST verified pair is still detected
+    * with probability >= target_min_ppm. This closes the tuning loop the
+    * parameterized data-card opened: the card sweeps thresholds, this
+    * route picks the index shape that detects them — what d17 runs
+    * programmatically, drivable from the UI. The surface is
+    * d(num_hashes) rows (divisor-count-sized, <= 34 for any
+    * num_hashes <= 1024), so the whole table ships in the response; the
+    * corpus is priced ONCE (pickLsh reuses the collected surface rather
+    * than re-running the pair join). Validation follows the
+    * shard-manifest conventions. */
+  private def lshPlanRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val Seq(text, id) = p.required("text", "id")
+    knownColumns(df, text, id)
+    stringCol(df, text)
+    val numHashes = p.int("num_hashes", 128, 1, 1024)
+    val floor = p.fraction("floor", 0.5)
+    val targetMinPpm = p.long("target_min_ppm", 950000L, 0, 1000000L)
+    // lshPlan localCheckpoints its verified-pair set — release it
+    // under the op-sweep discipline (withOpSweep)
+    val rows = withOpSweep {
+      Dedup.lshPlan(df, text, id, numHashes = numHashes,
+        floorThreshold = floor).collect()
+    }
+    val (pb, pr) = Dedup.pickLsh(
+      rows.toSeq.map(r => (r.getInt(0), r.getInt(1), r.getLong(3),
+        r.getLong(6))), targetMinPpm)
+    Json.obj(
+      "table" -> tablePath,
+      "text" -> text,
+      "id" -> id,
+      "num_hashes" -> numHashes.toLong,
+      "floor" -> floor,
+      "target_min_ppm" -> targetMinPpm,
+      "picked_bands" -> pb.toLong,
+      "picked_rows_per_band" -> pr.toLong,
+      "plan" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+        "bands" -> r.getInt(0).toLong,
+        "rows_per_band" -> r.getInt(1).toLong,
+        "index_rows" -> r.getLong(2),
+        "n_pairs" -> r.getLong(3),
+        "exp_found_ppm" -> r.getLong(4),
+        "mean_p_ppm" -> r.getLong(5),
+        "min_p_ppm" -> r.getLong(6)))))
+  }
+
+  /** Per-document realization of the mixture allocation
+    * (`?domain=<col>&id=<col>&weight=<col>&budget=<long>[&epochs=<int>]
+    * [&limit=<int>]`): graft.ops.Sampling.epochPlan — how many copies of
+    * each document enter the training mix so each domain spends exactly
+    * its water-filled allocation (whole epochs for every doc + one extra
+    * copy for the greedy md5-ordered fractional prefix). The response
+    * carries the domain-sized rollup (n_docs, full_epochs, n_extra,
+    * total_copies — the proof the realization sums back to the
+    * allocation) plus the first `limit` per-doc rows by id (default 100,
+    * cap 1000): the realization is corpus-sized, so the full plan is a
+    * dataset to write, not a payload to serve. Same `maxLabels` bound on
+    * domain cardinality as the mixture route. */
+  private def epochPlanRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val epochs = p.int("epochs", 2)
+    val limit = p.int("limit", 100)
+    val Seq(domain, id, weight) = p.required("domain", "id", "weight")
+    val budget = mixtureBudget(p)
+    check(epochs >= 1, "epochs must be >= 1")
+    check(limit >= 0 && limit <= 1000, "limit must be between 0 and 1000")
+    knownColumns(df, domain, id, weight)
+    numericCol(df, weight, "Weight")
+    groupableCol(df, domain)
+    withOpSweep {
+      val plan = Sampling.epochPlan(df, domain, id, weight,
+        expr(s"avail * $epochs"), budget).persist()
+      try {
+        // full_epochs = min(n_copies): the fractional prefix never covers
+        // a whole domain (frac < avail), so some doc always sits at the
+        // whole-epoch floor
+        val rollup = plan.groupBy(col("domain"))
+          .agg(count(lit(1)).as("n_docs"),
+            min(col("n_copies")).as("full_epochs"),
+            sum(col("n_copies")).as("total_copies"),
+            sum(col("n_copies") * col("w")).as("spent_weight"))
+          .orderBy(col("domain").asc_nulls_last)
+          .limit(MaxLabels + 1).collect()
+        check(rollup.length <= MaxLabels, s"Column $domain has more than " +
+          s"$MaxLabels distinct values — epoch plans are for domain-like columns")
+        // the documented "first `limit` per-doc rows by id": an explicit
+        // sort makes the capped sample deterministic across identical
+        // requests (same convention as shard-manifest / dedup-probe)
+        val sample = plan.orderBy(col("id")).limit(limit).collect()
+        Json.obj(
+          "table" -> tablePath,
+          "domain" -> domain,
+          "id" -> id,
+          "weight" -> weight,
+          "budget" -> budget,
+          "epochs_cap" -> epochs.toLong,
+          "domains" -> rollup.toSeq.map(r => Json.Raw(Json.obj(
+            "domain" -> optString(r, 0),
+            "n_docs" -> r.getLong(1),
+            "full_epochs" -> r.getLong(2),
+            "n_extra" -> (r.getLong(3) - r.getLong(2) * r.getLong(1)),
+            "total_copies" -> r.getLong(3),
+            "spent_weight" -> r.getLong(4)))),
+          "sample" -> sample.toSeq.map(r => Json.Raw(Json.obj(
+            "id" -> String.valueOf(r.get(0)),
+            "domain" -> optString(r, 1),
+            "w" -> r.getLong(2),
+            "n_copies" -> r.getLong(3)))))
+      } finally plan.unpersist()
+    }
+  }
+
+  /** Class-balance report of one column (`?column=` required): per-value
+    * counts, ppm shares, and the corpus Gini impurity
+    * (graft.ops.Profile.classBalance — one keyed aggregation). The label
+    * cardinality bounds the response; a high-cardinality column is a
+    * caller error surfaced as 400 when more than `maxLabels` (default
+    * 1000) rows come back — balance reports are for label-like columns. */
+  private def balanceRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val Seq(column) = p.required("column")
+    check(df.columns.contains(column), s"Unknown column: $column")
+    // same convention as profileRoute: an explicitly requested
+    // non-groupable column (map/array/struct) is a caller error — 400,
+    // not a raw AnalysisException surfaced as 500
+    groupableCol(df, column)
+    val rows = Profile.classBalance(df, column).limit(MaxLabels + 1).collect()
+    check(rows.length <= MaxLabels, s"Column $column has more than " +
+      s"$MaxLabels distinct values — balance reports are for label-like columns")
+    Json.obj(
+      "table" -> tablePath,
+      "column" -> column,
+      "gini_ppm" -> (if (rows.isEmpty) null
+                     else java.lang.Long.valueOf(rows.head.getLong(3))),
+      "balance" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+        "label" -> optString(r, 0),
+        "n" -> r.getLong(1),
+        "share_ppm" -> r.getLong(2)))))
+  }
+
+  // ---------------------------------------------------- probe handlers
 
   /** Probe a batch table against a STORED dedup index
     * (`?index=<ns.table>&text=&id=[&threshold=][&num_hashes=][&bands=]
@@ -1273,130 +962,65 @@ final class HttpFacade(
     * the build ops (see withOpSweep's invariant for the
     * eviction-tolerance argument).
     */
-  private def dedupProbeRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
+  private def dedupProbeRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val Seq(indexPath, text, id) = p.required("index", "text", "id")
+    val index = stored(indexPath, "index", Seq("cid", "dig", "csh", "sig"))
+    knownColumns(df, text, id)
+    stringCol(df, text)
+    val threshold = p.fraction("threshold", 0.8)
+    val numHashes = p.int("num_hashes", 128, 1, 1024)
+    val bands = p.int("bands", 32)
+    check(!p.contains("bands") || (bands >= 1 && numHashes % bands == 0),
+      s"bands must be a positive divisor of num_hashes ($numHashes)")
+    val shingleLen = p.int("shingle_len", 3, 1, 32)
+    val limit = p.int("limit", 1000, 0, 10000)
+    // the stored signatures fix num_hashes at build time; a probe run
+    // with a different value would slice mismatched-length arrays and
+    // return silently-wrong fuzzy verdicts — a caller error, surfaced
+    // as 400 off a one-row probe (never a full index scan)
+    val storedLen = index.select(size(col("sig")).as("n")).limit(1)
+      .collect().headOption.map(_.getInt(0))
+    storedLen.filter(_ != numHashes).foreach(n => reject(400,
+      s"num_hashes ($numHashes) does not match the index's signature length ($n)"))
+    // one persist, two actions (rollup + capped page): without it the
+    // band join and Jaccard verify would run twice per request. The
+    // persist deliberately runs OUTSIDE the op lock (lineage kept —
+    // see withOpSweep's invariant): a concurrent build op's sweep may
+    // evict it between the two actions, costing a recompute in that
+    // rare overlap, never a wrong result — the price of keeping the
+    // probe fully concurrent with the build surface
+    val decisions = Dedup.incrementalProbe(index, df, text, id,
+      shingleLen = shingleLen, numHashes = numHashes, bands = bands,
+      threshold = threshold).persist()
     try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val indexPath = qp.get("index").filter(_.nonEmpty)
-      val textCol = qp.get("text").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (indexPath.isEmpty || textCol.isEmpty || idCol.isEmpty) {
-        sendJson(ex, 400, detail(
-          "index, text and id parameters are required")); return
-      }
-      val index = loadStored(ex, indexPath.get, "index",
-        Seq("cid", "dig", "csh", "sig")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val unknown = Seq(textCol.get, idCol.get)
-        .filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (df.schema(textCol.get).dataType !=
-          org.apache.spark.sql.types.StringType) {
-        sendJson(ex, 400,
-          detail(s"Text column ${textCol.get} is not a string column"))
-        return
-      }
-      val threshold = qp.get("threshold").map(_.toDoubleOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("threshold must be a number")); return
-        case Some(Some(t)) if t.isNaN || t <= 0.0 || t > 1.0 =>
-          sendJson(ex, 400, detail("threshold must be in (0, 1]")); return
-        case Some(Some(t)) => t
-        case None => 0.8
-      }
-      val numHashes = intParam(ex, qp, "num_hashes", 128, 1, 1024) match {
-        case None => return
-        case Some(v) => v
-      }
-      val bands = qp.get("bands").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("bands must be an integer")); return
-        case Some(Some(b)) if b < 1 || numHashes % b != 0 =>
-          sendJson(ex, 400, detail(
-            s"bands must be a positive divisor of num_hashes ($numHashes)"))
-          return
-        case Some(Some(b)) => b
-        case None => 32
-      }
-      val shingleLen = intParam(ex, qp, "shingle_len", 3, 1, 32) match {
-        case None => return
-        case Some(v) => v
-      }
-      val limit = intParam(ex, qp, "limit", 1000, 0, 10000) match {
-        case None => return
-        case Some(v) => v
-      }
-      import org.apache.spark.sql.functions.{col, count, lit, size, when}
-      // the stored signatures fix num_hashes at build time; a probe run
-      // with a different value would slice mismatched-length arrays and
-      // return silently-wrong fuzzy verdicts — a caller error, surfaced
-      // as 400 off a one-row probe (never a full index scan)
-      val storedLen = index.select(size(col("sig")).as("n")).limit(1)
-        .collect().headOption.map(_.getInt(0))
-      if (storedLen.exists(_ != numHashes)) {
-        sendJson(ex, 400, detail(s"num_hashes ($numHashes) does not " +
-          s"match the index's signature length (${storedLen.get})"))
-        return
-      }
-      // one persist, two actions (rollup + capped page): without it the
-      // band join and Jaccard verify would run twice per request. The
-      // persist deliberately runs OUTSIDE the op lock (lineage kept —
-      // see withOpSweep's invariant): a concurrent build op's sweep may
-      // evict it between the two actions, costing a recompute in that
-      // rare overlap, never a wrong result — the price of keeping the
-      // probe fully concurrent with the build surface
-      val decisions = graft.ops.Dedup.incrementalProbe(index, df,
-        textCol.get, idCol.get, shingleLen = shingleLen,
-        numHashes = numHashes, bands = bands,
-        threshold = threshold).persist()
-      try {
-        val tot = decisions.agg(
-          count(lit(1)).as("n_docs"),
-          count(when(col("is_new"), 1)).as("n_new"),
-          count(col("exact_dup_of")).as("n_exact_dup"),
-          count(col("fuzzy_dup_of")).as("n_fuzzy_dup")).collect()(0)
-        // the documented contract: the first `limit` decisions IN ID
-        // ORDER — an unordered limit over a join output changes rows
-        // run-to-run (shard-manifest's sorted-cap convention)
-        val rows = decisions.orderBy(col("id")).limit(limit).collect()
-        sendJson(ex, 200, Json.obj(
-          "table" -> tablePath,
-          "index" -> indexPath.get,
-          "text" -> textCol.get,
-          "id" -> idCol.get,
-          "threshold" -> threshold,
-          "num_hashes" -> numHashes.toLong,
-          "bands" -> bands.toLong,
-          "shingle_len" -> shingleLen.toLong,
-          "n_docs" -> tot.getLong(0),
-          "n_new" -> tot.getLong(1),
-          "n_exact_dup" -> tot.getLong(2),
-          "n_fuzzy_dup" -> tot.getLong(3),
-          "decisions" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-            "id" -> String.valueOf(r.get(0)),
-            "exact_dup_of" ->
-              (if (r.isNullAt(1)) null else String.valueOf(r.get(1))),
-            "fuzzy_dup_of" ->
-              (if (r.isNullAt(2)) null else String.valueOf(r.get(2))),
-            "is_new" -> r.getBoolean(3))))))
-      } finally { decisions.unpersist(blocking = false); () }
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+      val tot = decisions.agg(
+        count(lit(1)).as("n_docs"),
+        count(when(col("is_new"), 1)).as("n_new"),
+        count(col("exact_dup_of")).as("n_exact_dup"),
+        count(col("fuzzy_dup_of")).as("n_fuzzy_dup")).collect()(0)
+      // the documented contract: the first `limit` decisions IN ID
+      // ORDER — an unordered limit over a join output changes rows
+      // run-to-run (shard-manifest's sorted-cap convention)
+      val rows = decisions.orderBy(col("id")).limit(limit).collect()
+      Json.obj(
+        "table" -> tablePath,
+        "index" -> indexPath,
+        "text" -> text,
+        "id" -> id,
+        "threshold" -> threshold,
+        "num_hashes" -> numHashes.toLong,
+        "bands" -> bands.toLong,
+        "shingle_len" -> shingleLen.toLong,
+        "n_docs" -> tot.getLong(0),
+        "n_new" -> tot.getLong(1),
+        "n_exact_dup" -> tot.getLong(2),
+        "n_fuzzy_dup" -> tot.getLong(3),
+        "decisions" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+          "id" -> String.valueOf(r.get(0)),
+          "exact_dup_of" -> optString(r, 1),
+          "fuzzy_dup_of" -> optString(r, 2),
+          "is_new" -> r.getBoolean(3)))))
+    } finally decisions.unpersist(blocking = false)
   }
 
   /** ANN search over a STORED IVF index
@@ -1415,101 +1039,39 @@ final class HttpFacade(
     * (query_id, rk, id, sim) rows in (query_id, rk) order, capped at
     * `limit` (default 1000, cap 10000). Read-only and persist-free —
     * one action, no op lock, fully concurrent with the build ops. */
-  private def annSearchRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val indexPath = qp.get("index").filter(_.nonEmpty)
-      val centPath = qp.get("centroids").filter(_.nonEmpty)
-      val vecCol = qp.get("vec").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (indexPath.isEmpty || centPath.isEmpty || vecCol.isEmpty ||
-          idCol.isEmpty) {
-        sendJson(ex, 400, detail(
-          "index, centroids, vec and id parameters are required")); return
-      }
-      val assign = loadStored(ex, indexPath.get, "index",
-        Seq("id", "vec", "cid")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val cent = loadStored(ex, centPath.get, "centroids",
-        Seq("cid", "cvec")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val unknown = Seq(vecCol.get, idCol.get).filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (!df.schema(vecCol.get).dataType
-          .isInstanceOf[org.apache.spark.sql.types.ArrayType]) {
-        sendJson(ex, 400,
-          detail(s"Vector column ${vecCol.get} is not an array column"))
-        return
-      }
-      // dimension agreement across all three vector sources, each a
-      // one-row probe: a mismatched query would otherwise score the
-      // common prefix of every corpus vector and return a 200 with
-      // silently-wrong rankings (the num_hashes-vs-signature class of
-      // caller error, same cheap-check remedy)
-      def dimOf(t: org.apache.spark.sql.DataFrame, c: String): Option[Int] = {
-        import org.apache.spark.sql.functions.{col, size}
-        t.select(size(col(c)).as("n")).filter(col("n").isNotNull)
-          .limit(1).collect().headOption.map(_.getInt(0))
-      }
-      val (qDim, cDim, iDim) =
-        (dimOf(df, vecCol.get), dimOf(cent, "cvec"), dimOf(assign, "vec"))
-      val mismatch = Seq(
-        (qDim, cDim, "query vectors and the centroids"),
-        (iDim, cDim, "the stored index and the centroids"))
-        .collectFirst { case (Some(x), Some(y), w) if x != y => (x, y, w) }
-      if (mismatch.isDefined) {
-        val (x, y, w) = mismatch.get
-        sendJson(ex, 400, detail(
-          s"Vector dimension mismatch between $w ($x vs $y)"))
-        return
-      }
-      val k = intParam(ex, qp, "k", 10, 1, 1000) match {
-        case None => return; case Some(v) => v
-      }
-      val nprobe = intParam(ex, qp, "nprobe", 2, 1, 1024) match {
-        case None => return; case Some(v) => v
-      }
-      val limit = intParam(ex, qp, "limit", 1000, 0, 10000) match {
-        case None => return; case Some(v) => v
-      }
-      // one action: the operator's output is already (query_id, rk)-
-      // ordered, so the capped page is deterministic without a persist
-      val rows = HttpFacade.annSearch(df, vecCol.get, idCol.get,
-        assign, cent, k, nprobe).limit(limit).collect()
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "index" -> indexPath.get,
-        "centroids" -> centPath.get,
-        "vec" -> vecCol.get,
-        "id" -> idCol.get,
-        "k" -> k.toLong,
-        "nprobe" -> nprobe.toLong,
-        "n_results" -> rows.length.toLong,
-        "results" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-          "query_id" -> String.valueOf(r.get(0)),
-          "rk" -> r.getInt(1).toLong,
-          "id" -> String.valueOf(r.get(2)),
-          "sim" -> r.getDouble(3))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+  private def annSearchRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val Seq(indexPath, centPath, vec, id) = p.required("index", "centroids", "vec", "id")
+    val assign = stored(indexPath, "index", Seq("id", "vec", "cid"))
+    val cent = stored(centPath, "centroids", Seq("cid", "cvec"))
+    knownColumns(df, vec, id)
+    arrayCol(df, vec)
+    // dimension agreement across all three vector sources, each a
+    // one-row probe: a mismatched query would otherwise score the
+    // common prefix of every corpus vector and return a 200 with
+    // silently-wrong rankings (the num_hashes-vs-signature class of
+    // caller error, same cheap-check remedy)
+    ivfDimsAgree(df, vec, assign, cent)
+    val k = p.int("k", 10, 1, 1000)
+    val nprobe = p.int("nprobe", 2, 1, 1024)
+    val limit = p.int("limit", 1000, 0, 10000)
+    // one action: the operator's output is already (query_id, rk)-
+    // ordered, so the capped page is deterministic without a persist
+    val rows = HttpFacade.annSearch(df, vec, id, assign, cent, k, nprobe)
+      .limit(limit).collect()
+    Json.obj(
+      "table" -> tablePath,
+      "index" -> indexPath,
+      "centroids" -> centPath,
+      "vec" -> vec,
+      "id" -> id,
+      "k" -> k.toLong,
+      "nprobe" -> nprobe.toLong,
+      "n_results" -> rows.length.toLong,
+      "results" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+        "query_id" -> String.valueOf(r.get(0)),
+        "rk" -> r.getInt(1).toLong,
+        "id" -> String.valueOf(r.get(2)),
+        "sim" -> r.getDouble(3)))))
   }
 
   /** BM25 search over a STORED postings index
@@ -1526,68 +1088,25 @@ final class HttpFacade(
     * (score desc, id) order — `k` IS the response cap (1..1000,
     * default 10). Read-only and persist-free (one action), outside the
     * op lock. */
-  private def bm25SearchRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val postings = spark.table(tablePath)
-      val missing = Seq("t", "id", "tf", "dl")
-        .filterNot(postings.columns.contains)
-      if (missing.nonEmpty) {
-        sendJson(ex, 400, detail(s"Table $tablePath is not a bm25Index " +
-          s"postings table (missing: ${missing.mkString(", ")})"))
-        return
-      }
-      val qp = queryParams(ex)
-      val statsPath = qp.get("stats").filter(_.nonEmpty)
-      val termsRaw = qp.get("terms").filter(_.nonEmpty)
-      if (statsPath.isEmpty || termsRaw.isEmpty) {
-        sendJson(ex, 400,
-          detail("stats and terms parameters are required")); return
-      }
-      val stats = loadStored(ex, statsPath.get, "stats",
-        Seq("n_docs", "total_tokens")) match {
-        case None => return
-        case Some(t) => t
-      }
-      // percent-decode: terms arrive URL-encoded; URI.getQuery already
-      // decoded them, so a plain split suffices (same as langs)
-      val terms = termsRaw.get.split(",").toSeq
-        .map(_.trim.toLowerCase(java.util.Locale.ROOT)).filter(_.nonEmpty)
-      if (terms.isEmpty) {
-        sendJson(ex, 400, detail(
-          "terms must be a non-empty comma-separated list")); return
-      }
-      if (terms.length > 64) {
-        sendJson(ex, 400, detail(
-          "terms is capped at 64 — a serving query, not a batch join"))
-        return
-      }
-      val k = intParam(ex, qp, "k", 10, 1, 1000) match {
-        case None => return
-        case Some(v) => v
-      }
-      val rows = HttpFacade.bm25Search(postings, stats, terms, k).collect()
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "stats" -> statsPath.get,
-        "terms" -> terms.mkString(","),
-        "k" -> k.toLong,
-        "n_results" -> rows.length.toLong,
-        "results" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-          "id" -> String.valueOf(r.get(0)),
-          "n_terms_hit" -> r.getLong(1),
-          "score_scaled" -> r.getLong(2))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+  private def bm25SearchRoute(tablePath: String, postings: DataFrame, p: Params): String = {
+    val missing = Seq("t", "id", "tf", "dl").filterNot(postings.columns.contains)
+    check(missing.isEmpty, s"Table $tablePath is not a bm25Index " +
+      s"postings table (missing: ${missing.mkString(", ")})")
+    val Seq(statsPath, _) = p.required("stats", "terms")
+    val stats = stored(statsPath, "stats", Seq("n_docs", "total_tokens"))
+    val terms = queryTerms(p)
+    val k = p.int("k", 10, 1, 1000)
+    val rows = HttpFacade.bm25Search(postings, stats, terms, k).collect()
+    Json.obj(
+      "table" -> tablePath,
+      "stats" -> statsPath,
+      "terms" -> terms.mkString(","),
+      "k" -> k.toLong,
+      "n_results" -> rows.length.toLong,
+      "results" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+        "id" -> String.valueOf(r.get(0)),
+        "n_terms_hit" -> r.getLong(1),
+        "score_scaled" -> r.getLong(2)))))
   }
 
   /** Contamination search over a STORED fingerprint index
@@ -1613,91 +1132,40 @@ final class HttpFacade(
     * (id, probe_id) order, capped at `limit` — the operator's output is
     * already totally ordered, so the capped page is deterministic
     * without a persist. Read-only, one action, outside the op lock. */
-  private def contaminationSearchRoute(ex: HttpExchange,
-      tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val indexPath = qp.get("index").filter(_.nonEmpty)
-      val textCol = qp.get("text").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (indexPath.isEmpty || textCol.isEmpty || idCol.isEmpty) {
-        sendJson(ex, 400, detail(
-          "index, text and id parameters are required")); return
-      }
-      val index = loadStored(ex, indexPath.get, "index",
-        Seq("cid", "fp", "fpb")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val unknown = Seq(textCol.get, idCol.get).filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (df.schema(textCol.get).dataType !=
-          org.apache.spark.sql.types.StringType) {
-        sendJson(ex, 400,
-          detail(s"Text column ${textCol.get} is not a string column"))
-        return
-      }
-      val minShared = intParam(ex, qp, "min_shared", 2, 1, 10000) match {
-        case None => return; case Some(v) => v
-      }
-      val buckets = intParam(ex, qp, "buckets", 64, 1, 65536) match {
-        case None => return; case Some(v) => v
-      }
-      val k = intParam(ex, qp, "k", 8, 1, 64) match {
-        case None => return; case Some(v) => v
-      }
-      val window = intParam(ex, qp, "window", 4, 1, 64) match {
-        case None => return; case Some(v) => v
-      }
-      val hashMode = qp.getOrElse("hash_mode", "xx")
-      if (!Seq("xx", "md5").contains(hashMode)) {
-        sendJson(ex, 400, detail("hash_mode must be xx or md5")); return
-      }
-      val limit = intParam(ex, qp, "limit", 1000, 0, 10000) match {
-        case None => return; case Some(v) => v
-      }
-      // the operator's bucket validation is a caller error here, not a
-      // 500: the index was built with one modulus and the request named
-      // another
-      val result = try {
-        HttpFacade.contaminationSearch(df, textCol.get, idCol.get,
-          index, k, window, minShared, hashMode, buckets)
-      } catch {
-        case e: IllegalArgumentException =>
-          sendJson(ex, 400, detail(e.getMessage)); return
-      }
-      val rows = result.limit(limit).collect()
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "index" -> indexPath.get,
-        "text" -> textCol.get,
-        "id" -> idCol.get,
-        "min_shared" -> minShared.toLong,
-        "buckets" -> buckets.toLong,
-        "k" -> k.toLong,
-        "window" -> window.toLong,
-        "hash_mode" -> hashMode,
-        "n_results" -> rows.length.toLong,
-        "results" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-          "id" -> String.valueOf(r.get(0)),
-          "probe_id" -> String.valueOf(r.get(1)),
-          "n_shared" -> r.getInt(2).toLong)))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+  private def contaminationSearchRoute(tablePath: String, df: DataFrame,
+      p: Params): String = {
+    val Seq(indexPath, text, id) = p.required("index", "text", "id")
+    val index = stored(indexPath, "index", Seq("cid", "fp", "fpb"))
+    knownColumns(df, text, id)
+    stringCol(df, text)
+    val minShared = p.int("min_shared", 2, 1, 10000)
+    val buckets = p.int("buckets", 64, 1, 65536)
+    val k = p.int("k", 8, 1, 64)
+    val window = p.int("window", 4, 1, 64)
+    val hashMode = p.getOrElse("hash_mode", "xx")
+    check(Seq("xx", "md5").contains(hashMode), "hash_mode must be xx or md5")
+    val limit = p.int("limit", 1000, 0, 10000)
+    // the operator's bucket validation is a caller error here, not a
+    // 500: the index was built with one modulus and the request named
+    // another
+    val result = callerError(HttpFacade.contaminationSearch(df, text, id,
+      index, k, window, minShared, hashMode, buckets))
+    val rows = result.limit(limit).collect()
+    Json.obj(
+      "table" -> tablePath,
+      "index" -> indexPath,
+      "text" -> text,
+      "id" -> id,
+      "min_shared" -> minShared.toLong,
+      "buckets" -> buckets.toLong,
+      "k" -> k.toLong,
+      "window" -> window.toLong,
+      "hash_mode" -> hashMode,
+      "n_results" -> rows.length.toLong,
+      "results" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+        "id" -> String.valueOf(r.get(0)),
+        "probe_id" -> String.valueOf(r.get(1)),
+        "n_shared" -> r.getInt(2).toLong))))
   }
 
   /** Perceptual media search over a STORED signature index
@@ -1719,120 +1187,55 @@ final class HttpFacade(
     * surfaces as a 400, not a 500. Response: (id, probe_id) near-dup
     * matches at the release threshold, id-ordered, capped at `limit`.
     * Read-only, outside the op lock. */
-  private def mediaSearchRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
+  private def mediaSearchRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val Seq(indexPath, metaPath) = p.required("index", "meta")
+    val idCol = p.getOrElse("id", "id")
+    val payloadCol = p.getOrElse("payload", "payload")
+    val formatCol = p.getOrElse("format", "format")
+    val limit = p.int("limit", 1000, 0, 10000)
+    // a corpus-sized probe table must not ride the broadcast path
+    // (the operator 9x-replicates and broadcasts the probe keys —
+    // fine for an arriving batch, an OOM/8 GB-limit hazard for a
+    // whole corpus); nothing restricts what table a caller points
+    // here, so the route exposes the operator's own escape hatch
+    val broadcastProbe = p.getOrElse("broadcast", "true") match {
+      case "true" => true
+      case "false" => false
+      case _ => reject(400, "broadcast must be true or false")
     }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val indexPath = qp.get("index").filter(_.nonEmpty)
-      val metaPath = qp.get("meta").filter(_.nonEmpty)
-      if (indexPath.isEmpty || metaPath.isEmpty) {
-        sendJson(ex, 400, detail(
-          "index and meta parameters are required")); return
-      }
-      val idCol = qp.getOrElse("id", "id")
-      val payloadCol = qp.getOrElse("payload", "payload")
-      val formatCol = qp.getOrElse("format", "format")
-      val limit = intParam(ex, qp, "limit", 1000, 0, 10000) match {
-        case None => return
-        case Some(v) => v
-      }
-      // a corpus-sized probe table must not ride the broadcast path
-      // (the operator 9x-replicates and broadcasts the probe keys —
-      // fine for an arriving batch, an OOM/8 GB-limit hazard for a
-      // whole corpus); nothing restricts what table a caller points
-      // here, so the route exposes the operator's own escape hatch
-      val broadcastProbe = qp.getOrElse("broadcast", "true") match {
-        case "true" => true
-        case "false" => false
-        case _ =>
-          sendJson(ex, 400, detail("broadcast must be true or false"))
-          return
-      }
-      val index = loadStored(ex, indexPath.get, "index",
-        Seq("id", "format", "hist", "nn", "c1", "c2", "sb")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val metaDf = loadStored(ex, metaPath.get, "meta",
-        Seq("bin1", "bin2", "threshold_ppm", "n_buckets")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val missing = Seq(idCol, payloadCol).filterNot(df.columns.contains)
-      if (missing.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${missing.mkString(", ")}")); return
-      }
-      val idIntegral = df.schema(idCol).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (!idIntegral) {
-        sendJson(ex, 400, detail(
-          s"Id column $idCol is not an integral column")); return
-      }
-      if (df.schema(payloadCol).dataType !=
-          org.apache.spark.sql.types.BinaryType) {
-        sendJson(ex, 400, detail(
-          s"Payload column $payloadCol is not a binary column")); return
-      }
-      // format may be a dotted struct field — resolve through select
-      val probeMedia = try {
-        df.select(
-          org.apache.spark.sql.functions.col(idCol).cast("long").as("id"),
-          org.apache.spark.sql.functions.col(payloadCol).as("payload"),
-          org.apache.spark.sql.functions.struct(
-            org.apache.spark.sql.functions.col(formatCol).cast("string")
-              .as("format"),
-            org.apache.spark.sql.functions.lit(0).as("width"),
-            org.apache.spark.sql.functions.lit(0).as("height"),
-            org.apache.spark.sql.functions.lit(0L).as("n_bytes"))
-            .as("meta"))
-      } catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          sendJson(ex, 400,
-            detail(s"Unknown format column $formatCol: ${e.getMessage}"))
-          return
-      }
-      // geometry drift is a caller error (wrong meta for this index),
-      // not a 500
-      val result = try {
-        graft.ops.Multimodal.mediaSignatureProbe(index, metaDf,
-          probeMedia, broadcastProbe)
-      } catch {
-        case e: IllegalArgumentException =>
-          sendJson(ex, 400, detail(e.getMessage)); return
-      }
-      val rows = result
-        .orderBy(org.apache.spark.sql.functions.col("id"),
-          org.apache.spark.sql.functions.col("probe_id"))
-        .limit(limit).collect()
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "index" -> indexPath.get,
-        "meta" -> metaPath.get,
-        "id" -> idCol,
-        "payload" -> payloadCol,
-        "format" -> formatCol,
-        "n_results" -> rows.length.toLong,
-        "results" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-          "id" -> r.getAs[Number](0).longValue(),
-          "probe_id" -> r.getAs[Number](1).longValue())))))
+    val index = stored(indexPath, "index",
+      Seq("id", "format", "hist", "nn", "c1", "c2", "sb"))
+    val metaDf = stored(metaPath, "meta",
+      Seq("bin1", "bin2", "threshold_ppm", "n_buckets"))
+    knownColumns(df, idCol, payloadCol)
+    integralCol(df, idCol)
+    check(df.schema(payloadCol).dataType == BinaryType,
+      s"Payload column $payloadCol is not a binary column")
+    // format may be a dotted struct field — resolve through select
+    val probeMedia = try {
+      df.select(col(idCol).cast("long").as("id"), col(payloadCol).as("payload"),
+        struct(col(formatCol).cast("string").as("format"), lit(0).as("width"),
+          lit(0).as("height"), lit(0L).as("n_bytes")).as("meta"))
     } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
+      case e: AnalysisException =>
+        reject(400, s"Unknown format column $formatCol: ${e.getMessage}")
     }
+    // geometry drift is a caller error (wrong meta for this index),
+    // not a 500
+    val result = callerError(
+      Multimodal.mediaSignatureProbe(index, metaDf, probeMedia, broadcastProbe))
+    val rows = result.orderBy(col("id"), col("probe_id")).limit(limit).collect()
+    Json.obj(
+      "table" -> tablePath,
+      "index" -> indexPath,
+      "meta" -> metaPath,
+      "id" -> idCol,
+      "payload" -> payloadCol,
+      "format" -> formatCol,
+      "n_results" -> rows.length.toLong,
+      "results" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+        "id" -> r.getAs[Number](0).longValue(),
+        "probe_id" -> r.getAs[Number](1).longValue()))))
   }
 
   /** ANN search over a STORED compressed (IVF-PQ) index
@@ -1864,146 +1267,62 @@ final class HttpFacade(
     * in place of `dist`. `k_coarse` < `k` is a 400 (the refine stage
     * can only narrow). Read-only and persist-free, outside the op
     * lock. */
-  private def pqSearchRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val indexPath = qp.get("index").filter(_.nonEmpty)
-      val centPath = qp.get("centroids").filter(_.nonEmpty)
-      val cbPath = qp.get("codebook").filter(_.nonEmpty)
-      val vecCol = qp.get("vec").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (indexPath.isEmpty || centPath.isEmpty || cbPath.isEmpty ||
-          vecCol.isEmpty || idCol.isEmpty) {
-        sendJson(ex, 400, detail(
-          "index, centroids, codebook, vec and id parameters are " +
-            "required")); return
-      }
-      val codes = loadStored(ex, indexPath.get, "index",
-        Seq("id", "sub", "code", "cid")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val cent = loadStored(ex, centPath.get, "centroids",
-        Seq("cid", "cvec")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val codebook = loadStored(ex, cbPath.get, "codebook",
-        Seq("code", "sub", "cvec")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val unknown = Seq(vecCol.get, idCol.get).filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (!df.schema(vecCol.get).dataType
-          .isInstanceOf[org.apache.spark.sql.types.ArrayType]) {
-        sendJson(ex, 400,
-          detail(s"Vector column ${vecCol.get} is not an array column"))
-        return
-      }
-      val m = intParam(ex, qp, "m", 4, 1, 4096) match {
-        case None => return; case Some(v) => v
-      }
-      val dim = intParam(ex, qp, "dim", 64, 1, 65536) match {
-        case None => return; case Some(v) => v
-      }
-      if (dim % m != 0) {
-        sendJson(ex, 400,
-          detail(s"dim=$dim must split into m=$m equal subspaces"))
-        return
-      }
-      // geometry agreement, each a one-row probe: query vectors must
-      // carry `dim` coordinates (a shorter query would null-pad and be
-      // dropped — an empty 200), centroid vectors must match the query
-      // dim (coarse probing scores the common prefix otherwise), and
-      // codebook subvectors must be dim/m wide (a mis-sliced ADC table
-      // scores garbage with a 200)
-      def dimOf(t: org.apache.spark.sql.DataFrame, c: String): Option[Int] = {
-        import org.apache.spark.sql.functions.{col, size}
-        t.select(size(col(c)).as("n")).filter(col("n").isNotNull)
-          .limit(1).collect().headOption.map(_.getInt(0))
-      }
-      val (qDim, cDim, bDim) =
-        (dimOf(df, vecCol.get), dimOf(cent, "cvec"), dimOf(codebook, "cvec"))
-      val bad = Seq(
-        (qDim, Some(dim), "the query vectors and dim"),
-        (cDim, Some(dim), "the centroids and dim"),
-        (bDim, Some(dim / m), "the codebook subvectors and dim/m"))
-        .collectFirst { case (Some(x), Some(y), w) if x != y => (x, y, w) }
-      if (bad.isDefined) {
-        val (x, y, w) = bad.get
-        sendJson(ex, 400, detail(
-          s"Vector dimension mismatch between $w ($x vs $y)"))
-        return
-      }
-      val k = intParam(ex, qp, "k", 10, 1, 1000) match {
-        case None => return; case Some(v) => v
-      }
-      val nprobe = intParam(ex, qp, "nprobe", 2, 1, 1024) match {
-        case None => return; case Some(v) => v
-      }
-      val limit = intParam(ex, qp, "limit", 1000, 0, 10000) match {
-        case None => return; case Some(v) => v
-      }
-      val rawPath = qp.get("raw").filter(_.nonEmpty)
-      val kCoarse = intParam(ex, qp, "k_coarse", 50, 1, 10000) match {
-        case None => return; case Some(v) => v
-      }
-      val raw = rawPath match {
-        case None => None
-        case Some(p) => loadStored(ex, p, "raw", Seq("id", "vec", "cid")) match {
-          case None => return
-          case Some(t) => Some(t)
-        }
-      }
-      if (raw.isDefined && kCoarse < k) {
-        sendJson(ex, 400, detail(
-          s"k_coarse=$kCoarse must be >= k=$k — the refine stage can " +
-            "only narrow the candidate pool")); return
-      }
-      // one action: both operators' output is (query_id, rk)-ordered
-      val valueField = if (raw.isDefined) "sim" else "dist"
-      val rows = (raw match {
-        case Some(r) => HttpFacade.pqRerank(df, vecCol.get, idCol.get,
-          codes, cent, codebook, r, m, dim, k, kCoarse, nprobe)
-        case None => HttpFacade.pqSearch(df, vecCol.get, idCol.get,
-          codes, cent, codebook, m, dim, k, nprobe)
-      }).limit(limit).collect()
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "index" -> indexPath.get,
-        "centroids" -> centPath.get,
-        "codebook" -> cbPath.get,
-        "vec" -> vecCol.get,
-        "id" -> idCol.get,
-        "m" -> m.toLong,
-        "dim" -> dim.toLong,
-        "k" -> k.toLong,
-        "nprobe" -> nprobe.toLong,
-        "raw" -> rawPath.orNull,
-        "k_coarse" -> (if (raw.isDefined) kCoarse.toLong else null),
-        "n_results" -> rows.length.toLong,
-        "results" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-          "query_id" -> String.valueOf(r.get(0)),
-          "rk" -> r.getInt(1).toLong,
-          "id" -> r.getLong(2),
-          valueField -> r.getDouble(3))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+  private def pqSearchRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val Seq(indexPath, centPath, cbPath, vec, id) =
+      p.required("index", "centroids", "codebook", "vec", "id")
+    val codes = stored(indexPath, "index", Seq("id", "sub", "code", "cid"))
+    val cent = stored(centPath, "centroids", Seq("cid", "cvec"))
+    val codebook = stored(cbPath, "codebook", Seq("code", "sub", "cvec"))
+    knownColumns(df, vec, id)
+    arrayCol(df, vec)
+    val m = p.int("m", 4, 1, 4096)
+    val dim = p.int("dim", 64, 1, 65536)
+    check(dim % m == 0, s"dim=$dim must split into m=$m equal subspaces")
+    // geometry agreement, each a one-row probe: query vectors must
+    // carry `dim` coordinates (a shorter query would null-pad and be
+    // dropped — an empty 200), centroid vectors must match the query
+    // dim (coarse probing scores the common prefix otherwise), and
+    // codebook subvectors must be dim/m wide (a mis-sliced ADC table
+    // scores garbage with a 200)
+    dimsAgree(
+      (dimOf(df, vec), Some(dim), "the query vectors and dim"),
+      (dimOf(cent, "cvec"), Some(dim), "the centroids and dim"),
+      (dimOf(codebook, "cvec"), Some(dim / m), "the codebook subvectors and dim/m"))
+    val k = p.int("k", 10, 1, 1000)
+    val nprobe = p.int("nprobe", 2, 1, 1024)
+    val limit = p.int("limit", 1000, 0, 10000)
+    val rawPath = p.get("raw")
+    val kCoarse = p.int("k_coarse", 50, 1, 10000)
+    val raw = rawPath.map(stored(_, "raw", Seq("id", "vec", "cid")))
+    check(raw.isEmpty || kCoarse >= k, s"k_coarse=$kCoarse must be >= k=$k " +
+      "— the refine stage can only narrow the candidate pool")
+    // one action: both operators' output is (query_id, rk)-ordered
+    val valueField = if (raw.isDefined) "sim" else "dist"
+    val rows = (raw match {
+      case Some(r) => HttpFacade.pqRerank(df, vec, id,
+        codes, cent, codebook, r, m, dim, k, kCoarse, nprobe)
+      case None => HttpFacade.pqSearch(df, vec, id,
+        codes, cent, codebook, m, dim, k, nprobe)
+    }).limit(limit).collect()
+    Json.obj(
+      "table" -> tablePath,
+      "index" -> indexPath,
+      "centroids" -> centPath,
+      "codebook" -> cbPath,
+      "vec" -> vec,
+      "id" -> id,
+      "m" -> m.toLong,
+      "dim" -> dim.toLong,
+      "k" -> k.toLong,
+      "nprobe" -> nprobe.toLong,
+      "raw" -> rawPath.orNull,
+      "k_coarse" -> (if (raw.isDefined) kCoarse.toLong else null),
+      "n_results" -> rows.length.toLong,
+      "results" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+        "query_id" -> String.valueOf(r.get(0)),
+        "rk" -> r.getInt(1).toLong,
+        "id" -> r.getLong(2),
+        valueField -> r.getDouble(3)))))
   }
 
   /** Hybrid search over TWO stored indexes
@@ -2025,256 +1344,61 @@ final class HttpFacade(
     * rrf descending, ties by id; absent-from-list ranks are null.
     * Read-only and persist-free (one 1-row existence probe + one
     * action), outside the op lock. */
-  private def hybridSearchRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val postingsPath = qp.get("postings").filter(_.nonEmpty)
-      val statsPath = qp.get("stats").filter(_.nonEmpty)
-      val indexPath = qp.get("index").filter(_.nonEmpty)
-      val centPath = qp.get("centroids").filter(_.nonEmpty)
-      val vecCol = qp.get("vec").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      val termsRaw = qp.get("terms").filter(_.nonEmpty)
-      val queryIdRaw = qp.get("query_id").filter(_.nonEmpty)
-      if (postingsPath.isEmpty || statsPath.isEmpty || indexPath.isEmpty ||
-          centPath.isEmpty || vecCol.isEmpty || idCol.isEmpty ||
-          termsRaw.isEmpty || queryIdRaw.isEmpty) {
-        sendJson(ex, 400, detail(
-          "postings, stats, index, centroids, terms, vec, id and " +
-            "query_id parameters are required")); return
-      }
-      val queryId = queryIdRaw.get.toLongOption match {
-        case None =>
-          sendJson(ex, 400, detail("query_id must be an integer")); return
-        case Some(v) => v
-      }
-      val postings = loadStored(ex, postingsPath.get, "postings",
-        Seq("t", "id", "tf", "dl")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val stats = loadStored(ex, statsPath.get, "stats",
-        Seq("n_docs", "total_tokens")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val assign = loadStored(ex, indexPath.get, "index",
-        Seq("id", "vec", "cid")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val cent = loadStored(ex, centPath.get, "centroids",
-        Seq("cid", "cvec")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val unknown = Seq(vecCol.get, idCol.get).filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (!df.schema(vecCol.get).dataType
-          .isInstanceOf[org.apache.spark.sql.types.ArrayType]) {
-        sendJson(ex, 400,
-          detail(s"Vector column ${vecCol.get} is not an array column"))
-        return
-      }
-      val terms = termsRaw.get.split(",").toSeq
-        .map(_.trim.toLowerCase(java.util.Locale.ROOT)).filter(_.nonEmpty)
-      if (terms.isEmpty) {
-        sendJson(ex, 400, detail(
-          "terms must be a non-empty comma-separated list")); return
-      }
-      if (terms.length > 64) {
-        sendJson(ex, 400, detail(
-          "terms is capped at 64 — a serving query, not a batch join"))
-        return
-      }
-      // dimension agreement (the ann-search device): a mismatched query
-      // vector would null out of the cosine and silently degrade the
-      // response to the lexical list alone with a 200 — worse here than
-      // in ann-search, because a fused result LOOKS complete
-      def dimOf(t: org.apache.spark.sql.DataFrame, c: String): Option[Int] = {
-        import org.apache.spark.sql.functions.{col => c0, size}
-        t.select(size(c0(c)).as("n")).filter(c0("n").isNotNull)
-          .limit(1).collect().headOption.map(_.getInt(0))
-      }
-      val (qDim, cDim, iDim) =
-        (dimOf(df, vecCol.get), dimOf(cent, "cvec"), dimOf(assign, "vec"))
-      val mismatch = Seq(
-        (qDim, cDim, "query vectors and the centroids"),
-        (iDim, cDim, "the stored index and the centroids"))
-        .collectFirst { case (Some(x), Some(y), w) if x != y => (x, y, w) }
-      if (mismatch.isDefined) {
-        val (x, y, w) = mismatch.get
-        sendJson(ex, 400, detail(
-          s"Vector dimension mismatch between $w ($x vs $y)"))
-        return
-      }
-      val k = intParam(ex, qp, "k", 10, 1, 1000) match {
-        case None => return; case Some(v) => v
-      }
-      val kBm25 = intParam(ex, qp, "k_bm25", 20, 1, 1000) match {
-        case None => return; case Some(v) => v
-      }
-      val kDense = intParam(ex, qp, "k_dense", 20, 1, 1000) match {
-        case None => return; case Some(v) => v
-      }
-      val nprobe = intParam(ex, qp, "nprobe", 2, 1, 1024) match {
-        case None => return; case Some(v) => v
-      }
-      val c = intParam(ex, qp, "c", 60, 0, 100000) match {
-        case None => return; case Some(v) => v
-      }
-      import org.apache.spark.sql.functions.col
-      val queries = df.filter(col(idCol.get) === queryId)
-      // a missing query row would silently return the lexical list
-      // alone with a 200 — the 1-row pushed-filter probe makes it a 404
-      if (queries.select(col(idCol.get)).limit(1).collect().isEmpty) {
-        sendJson(ex, 404, detail(
-          s"query_id $queryId not found in $tablePath")); return
-      }
-      // the operators' integral-id requires are caller errors here (a
-      // string-id postings or index table), not 500s
-      val fused = try {
-        HttpFacade.hybridSearch(queries, vecCol.get, idCol.get,
-          assign, cent, postings, stats, terms,
-          kBm25, kDense, nprobe, c, k)
-      } catch {
-        case e: IllegalArgumentException =>
-          sendJson(ex, 400, detail(e.getMessage)); return
-      }
-      // one action: rrfFusion's output is (rrf desc, id)-ordered and
-      // k-capped, so the page is deterministic without a persist
-      val rows = fused.collect()
-      def optLong(r: org.apache.spark.sql.Row, i: Int): Any =
-        if (r.isNullAt(i)) null else r.getLong(i)
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "postings" -> postingsPath.get,
-        "stats" -> statsPath.get,
-        "index" -> indexPath.get,
-        "centroids" -> centPath.get,
-        "terms" -> terms.mkString(","),
-        "query_id" -> queryId,
-        "k" -> k.toLong,
-        "k_bm25" -> kBm25.toLong,
-        "k_dense" -> kDense.toLong,
-        "nprobe" -> nprobe.toLong,
-        "c" -> c.toLong,
-        "n_results" -> rows.length.toLong,
-        "results" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-          "id" -> r.getLong(0),
-          "rank_bm25" -> optLong(r, 1),
-          "rank_dense" -> optLong(r, 2),
-          "n_lists" -> r.getLong(3),
-          "rrf_scaled" -> r.getLong(4))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
-  }
-
-  /** Release-wide freshness audit
-    * (`GET /api/v1/catalog/release-audit?families=<spec>[;<spec>...]`,
-    * each spec `name:corpus.table:id_col:index.table:index_id_col`):
-    * the x13 dashboard served as a CATALOG-level route — it audits a
-    * whole release, so unlike the per-table probe routes it hangs off
-    * no single `{tablePath}`. Every family is validated like
-    * index-audit's pair (dotted paths, existence, integral id columns
-    * — surfaced as 400s/404s naming the family), then one
-    * [[graft.ops.Profile.releaseAudit]] run returns the per-family
-    * verdict rows (n_corpus / n_indexed / n_covered / n_unindexed /
-    * n_orphaned / fresh_ppm), family-ordered. At most 16 families — a
-    * release dashboard, not a batch join. Read-only, |families| × two
-    * pruned id columns, outside the op lock. */
-  private def releaseAuditRoute(ex: HttpExchange): Unit = {
-    try {
-      val qp = queryParams(ex)
-      val famRaw = qp.get("families").filter(_.nonEmpty)
-      if (famRaw.isEmpty) {
-        sendJson(ex, 400, detail(
-          "families parameter is required " +
-            "(name:corpus.table:id_col:index.table:index_id_col;...)"))
-        return
-      }
-      val specs = famRaw.get.split(";").toSeq.map(_.trim).filter(_.nonEmpty)
-      if (specs.isEmpty || specs.length > 16) {
-        sendJson(ex, 400, detail(
-          "families must list 1 to 16 specs — a release dashboard, " +
-            "not a batch join")); return
-      }
-      val parsed = specs.map(_.split(":", -1).toSeq)
-      parsed.find(_.length != 5) match {
-        case Some(bad) =>
-          sendJson(ex, 400, detail(s"Invalid family spec " +
-            s"'${bad.mkString(":")}' — expected " +
-            "name:corpus.table:id_col:index.table:index_id_col"))
-          return
-        case None =>
-      }
-      val names = parsed.map(_.head)
-      if (names.distinct.length != names.length) {
-        sendJson(ex, 400, detail("family names must be distinct")); return
-      }
-      def integral(t: org.apache.spark.sql.DataFrame, c: String): Boolean =
-        t.schema(c).dataType match {
-          case org.apache.spark.sql.types.ByteType |
-               org.apache.spark.sql.types.ShortType |
-               org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.LongType => true
-          case _ => false
-        }
-      val families = scala.collection.mutable.ArrayBuffer
-        .empty[(String, org.apache.spark.sql.DataFrame, String,
-          org.apache.spark.sql.DataFrame, String)]
-      for (Seq(name, corpusPath, idCol, indexPath, indexIdCol) <- parsed) {
-        val corpus = loadStored(ex, corpusPath, s"family '$name' corpus",
-          Seq(idCol)) match {
-          case None => return
-          case Some(t) => t
-        }
-        val index = loadStored(ex, indexPath, s"family '$name' index",
-          Seq(indexIdCol)) match {
-          case None => return
-          case Some(t) => t
-        }
-        // the indexAudit contract surfaced per family: a non-integral
-        // id would cast to null and report a fresh index fully stale
-        if (!integral(corpus, idCol)) {
-          sendJson(ex, 400, detail(s"Family '$name' id column $idCol " +
-            "is not an integral column")); return
-        }
-        if (!integral(index, indexIdCol)) {
-          sendJson(ex, 400, detail(s"Family '$name' index id column " +
-            s"$indexIdCol is not an integral column")); return
-        }
-        families += ((name, corpus, idCol, index, indexIdCol))
-      }
-      val rows = graft.ops.Profile.releaseAudit(families.toSeq).collect()
-      sendJson(ex, 200, Json.obj(
-        "n_families" -> rows.length.toLong,
-        "families" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-          "family" -> r.getString(0),
-          "n_corpus" -> r.getLong(1),
-          "n_indexed" -> r.getLong(2),
-          "n_covered" -> r.getLong(3),
-          "n_unindexed" -> r.getLong(4),
-          "n_orphaned" -> r.getLong(5),
-          "fresh_ppm" -> r.getLong(6))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+  private def hybridSearchRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val Seq(postingsPath, statsPath, indexPath, centPath, _, vec, id, queryIdRaw) =
+      p.required("postings", "stats", "index", "centroids", "terms", "vec",
+        "id", "query_id")
+    val queryId = queryIdRaw.toLongOption
+      .getOrElse(reject(400, "query_id must be an integer"))
+    val postings = stored(postingsPath, "postings", Seq("t", "id", "tf", "dl"))
+    val stats = stored(statsPath, "stats", Seq("n_docs", "total_tokens"))
+    val assign = stored(indexPath, "index", Seq("id", "vec", "cid"))
+    val cent = stored(centPath, "centroids", Seq("cid", "cvec"))
+    knownColumns(df, vec, id)
+    arrayCol(df, vec)
+    val terms = queryTerms(p)
+    // dimension agreement (the ann-search device): a mismatched query
+    // vector would null out of the cosine and silently degrade the
+    // response to the lexical list alone with a 200 — worse here than
+    // in ann-search, because a fused result LOOKS complete
+    ivfDimsAgree(df, vec, assign, cent)
+    val k = p.int("k", 10, 1, 1000)
+    val kBm25 = p.int("k_bm25", 20, 1, 1000)
+    val kDense = p.int("k_dense", 20, 1, 1000)
+    val nprobe = p.int("nprobe", 2, 1, 1024)
+    val c = p.int("c", 60, 0, 100000)
+    val queries = df.filter(col(id) === queryId)
+    // a missing query row would silently return the lexical list
+    // alone with a 200 — the 1-row pushed-filter probe makes it a 404
+    if (queries.select(col(id)).limit(1).collect().isEmpty)
+      reject(404, s"query_id $queryId not found in $tablePath")
+    // the operators' integral-id requires are caller errors here (a
+    // string-id postings or index table), not 500s
+    val fused = callerError(HttpFacade.hybridSearch(queries, vec, id,
+      assign, cent, postings, stats, terms, kBm25, kDense, nprobe, c, k))
+    // one action: rrfFusion's output is (rrf desc, id)-ordered and
+    // k-capped, so the page is deterministic without a persist
+    val rows = fused.collect()
+    Json.obj(
+      "table" -> tablePath,
+      "postings" -> postingsPath,
+      "stats" -> statsPath,
+      "index" -> indexPath,
+      "centroids" -> centPath,
+      "terms" -> terms.mkString(","),
+      "query_id" -> queryId,
+      "k" -> k.toLong,
+      "k_bm25" -> kBm25.toLong,
+      "k_dense" -> kDense.toLong,
+      "nprobe" -> nprobe.toLong,
+      "c" -> c.toLong,
+      "n_results" -> rows.length.toLong,
+      "results" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+        "id" -> r.getLong(0),
+        "rank_bm25" -> optLong(r, 1),
+        "rank_dense" -> optLong(r, 2),
+        "n_lists" -> r.getLong(3),
+        "rrf_scaled" -> r.getLong(4)))))
   }
 
   /** Stored-index freshness audit over any catalog table
@@ -2289,69 +1413,24 @@ final class HttpFacade(
     * audit's contract — non-numeric ids would cast to null and report
     * a fresh index as fully stale; a 400 here, not a 500). Read-only,
     * one pruned id column per side, outside the op lock. */
-  private def indexAuditRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val indexPath = qp.get("index").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      val indexIdCol = qp.get("index_id").filter(_.nonEmpty)
-      if (indexPath.isEmpty || idCol.isEmpty || indexIdCol.isEmpty) {
-        sendJson(ex, 400, detail(
-          "index, id and index_id parameters are required")); return
-      }
-      val index = loadStored(ex, indexPath.get, "index",
-        Seq(indexIdCol.get)) match {
-        case None => return
-        case Some(t) => t
-      }
-      if (!df.columns.contains(idCol.get)) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${idCol.get}")); return
-      }
-      def integral(t: org.apache.spark.sql.DataFrame, c: String): Boolean =
-        t.schema(c).dataType match {
-          case org.apache.spark.sql.types.ByteType |
-               org.apache.spark.sql.types.ShortType |
-               org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.LongType => true
-          case _ => false
-        }
-      if (!integral(df, idCol.get)) {
-        sendJson(ex, 400,
-          detail(s"Id column ${idCol.get} is not an integral column"))
-        return
-      }
-      if (!integral(index, indexIdCol.get)) {
-        sendJson(ex, 400, detail(
-          s"Index id column ${indexIdCol.get} is not an integral column"))
-        return
-      }
-      val r = graft.ops.Profile.indexAudit(df, idCol.get,
-        index, indexIdCol.get).collect()(0)
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "index" -> indexPath.get,
-        "id" -> idCol.get,
-        "index_id" -> indexIdCol.get,
-        "n_corpus" -> r.getLong(0),
-        "n_indexed" -> r.getLong(1),
-        "n_covered" -> r.getLong(2),
-        "n_unindexed" -> r.getLong(3),
-        "n_orphaned" -> r.getLong(4),
-        "fresh_ppm" -> r.getLong(5)))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+  private def indexAuditRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val Seq(indexPath, id, indexId) = p.required("index", "id", "index_id")
+    val index = stored(indexPath, "index", Seq(indexId))
+    knownColumns(df, id)
+    integralCol(df, id)
+    integralCol(index, indexId, "Index id")
+    val r = Profile.indexAudit(df, id, index, indexId).collect()(0)
+    Json.obj(
+      "table" -> tablePath,
+      "index" -> indexPath,
+      "id" -> id,
+      "index_id" -> indexId,
+      "n_corpus" -> r.getLong(0),
+      "n_indexed" -> r.getLong(1),
+      "n_covered" -> r.getLong(2),
+      "n_unindexed" -> r.getLong(3),
+      "n_orphaned" -> r.getLong(4),
+      "fresh_ppm" -> r.getLong(5))
   }
 
   /** Model-based scoring over any catalog table
@@ -2381,116 +1460,56 @@ final class HttpFacade(
     * as 400s — a broken stored artifact is a caller error, not a 500.
     * Read-only, outside the op lock; the scoring plan broadcasts the
     * vocab-sized weights table onto the corpus's tokens. */
-  private def classifyRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
+  private def classifyRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val Seq(countsPath, totalsPath) = p.required("counts", "totals")
+    val textCol = p.getOrElse("text", "text")
+    val idCol = p.getOrElse("id", "doc_id")
+    val limit = p.int("limit", 100, 1, 10000)
+    val countsStored = stored(countsPath, "model counts", Seq("t", "cp", "cn"))
+    val totalsStored = stored(totalsPath, "model totals", Seq("dp", "dn"))
+    val ledgerForm = totalsStored.columns.contains("batch_id")
+    val (counts, totals) =
+      if (ledgerForm) Classifier.nbModelFold(countsStored, totalsStored)
+      else {
+        val missing = Seq("tp", "tn", "v").filterNot(totalsStored.columns.contains)
+        check(missing.isEmpty, s"Model totals table $totalsPath is neither a " +
+          s"one-shot model (missing columns: ${missing.mkString(", ")}) nor a " +
+          "batch-stamped ledger (no batch_id column)")
+        check(totalsStored.limit(2).count() <= 1L, s"Model totals table " +
+          s"$totalsPath has multiple rows but no batch_id column - ambiguous: " +
+          "a one-shot model totals is exactly one row; an appendable ledger " +
+          "must be batch-stamped")
+        (countsStored, totalsStored)
       }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val countsPath = qp.get("counts").filter(_.nonEmpty)
-      val totalsPath = qp.get("totals").filter(_.nonEmpty)
-      if (countsPath.isEmpty || totalsPath.isEmpty) {
-        sendJson(ex, 400, detail(
-          "counts and totals parameters are required")); return
-      }
-      val textCol = qp.getOrElse("text", "text")
-      val idCol = qp.getOrElse("id", "doc_id")
-      val limit = intParam(ex, qp, "limit", 100, 1, 10000) match {
-        case None => return
-        case Some(v) => v
-      }
-      val countsStored = loadStored(ex, countsPath.get, "model counts",
-        Seq("t", "cp", "cn")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val totalsStored = loadStored(ex, totalsPath.get, "model totals",
-        Seq("dp", "dn")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val ledgerForm = totalsStored.columns.contains("batch_id")
-      val (counts, totals) =
-        if (ledgerForm)
-          graft.ops.Classifier.nbModelFold(countsStored, totalsStored)
-        else {
-          val missing = Seq("tp", "tn", "v")
-            .filterNot(totalsStored.columns.contains)
-          if (missing.nonEmpty) {
-            sendJson(ex, 400, detail(s"Model totals table " +
-              s"${totalsPath.get} is neither a one-shot model (missing " +
-              s"columns: ${missing.mkString(", ")}) nor a batch-stamped " +
-              "ledger (no batch_id column)")); return
-          }
-          if (totalsStored.limit(2).count() > 1L) {
-            sendJson(ex, 400, detail(s"Model totals table " +
-              s"${totalsPath.get} has multiple rows but no batch_id " +
-              "column - ambiguous: a one-shot model totals is exactly " +
-              "one row; an appendable ledger must be batch-stamped"))
-            return
-          }
-          (countsStored, totalsStored)
-        }
-      val missing = Seq(textCol, idCol).filterNot(df.columns.contains)
-      if (missing.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${missing.mkString(", ")}")); return
-      }
-      // same caller-error convention as box-search/bloom-check: a
-      // non-integral id column is a 400, not a ClassCastException-500
-      // out of the response builder's getAs[Number]
-      val idIntegral = df.schema(idCol).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (!idIntegral) {
-        sendJson(ex, 400, detail(
-          s"Id column $idCol is not an integral column")); return
-      }
-      val scored =
-        try graft.ops.Classifier.nbScore(df, textCol, idCol, counts, totals)
-        catch {
-          case e: IllegalArgumentException =>
-            sendJson(ex, 400, detail(e.getMessage)); return
-        }
-      // nbScore already orders by id; limit() on the ordered plan keeps
-      // the capped collect deterministic. Three actions read the plan
-      // (rows, kept, total) - persist so the scoring join executes
-      // once, not per action (the r11 constant-factor class)
-      scored.persist()
-      val (rows, kept, total) = try {
-        (scored.limit(limit).collect(),
-          scored.filter(
-            org.apache.spark.sql.functions.col("is_pos")).count(),
-          scored.count())
-      } finally { scored.unpersist(); () }
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "counts" -> countsPath.get,
-        "totals" -> totalsPath.get,
-        "model_form" -> (if (ledgerForm) "ledger" else "one_shot"),
-        "n_docs" -> total,
-        "n_pos" -> kept,
-        "n_returned" -> rows.length.toLong,
-        "docs" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-          "id" -> r.getAs[Number](0).longValue(),
-          "n_tokens" -> r.getLong(1),
-          "margin_scaled" -> r.getLong(2),
-          "prior_scaled" -> r.getLong(3),
-          "is_pos" -> r.getBoolean(4))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+    knownColumns(df, textCol, idCol)
+    // same caller-error convention as box-search/bloom-check: a
+    // non-integral id column is a 400, not a ClassCastException-500
+    // out of the response builder's getAs[Number]
+    integralCol(df, idCol)
+    val scored = callerError(Classifier.nbScore(df, textCol, idCol, counts, totals))
+    // nbScore already orders by id; limit() on the ordered plan keeps
+    // the capped collect deterministic. Three actions read the plan
+    // (rows, kept, total) - persist so the scoring join executes
+    // once, not per action (the r11 constant-factor class)
+    scored.persist()
+    val (rows, kept, total) = try {
+      (scored.limit(limit).collect(), scored.filter(col("is_pos")).count(),
+        scored.count())
+    } finally scored.unpersist()
+    Json.obj(
+      "table" -> tablePath,
+      "counts" -> countsPath,
+      "totals" -> totalsPath,
+      "model_form" -> (if (ledgerForm) "ledger" else "one_shot"),
+      "n_docs" -> total,
+      "n_pos" -> kept,
+      "n_returned" -> rows.length.toLong,
+      "docs" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+        "id" -> r.getAs[Number](0).longValue(),
+        "n_tokens" -> r.getLong(1),
+        "margin_scaled" -> r.getLong(2),
+        "prior_scaled" -> r.getLong(3),
+        "is_pos" -> r.getBoolean(4)))))
   }
 
   /** Tokenizer serving over any catalog table
@@ -2518,153 +1537,67 @@ final class HttpFacade(
     * from, surfaced as a 400 not a 500). Response: top-`limit` rows
     * in id order (orderBy precedes the capped collect — the r10 rule)
     * plus the corpus-wide doc count. Read-only, outside the op lock. */
-  private def tokenizeRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val mergesPath = qp.get("merges").filter(_.nonEmpty)
-      if (mergesPath.isEmpty) {
-        sendJson(ex, 400, detail("merges parameter is required")); return
-      }
-      val textCol = qp.getOrElse("text", "text")
-      val idCol = qp.getOrElse("id", "doc_id")
-      val limit = intParam(ex, qp, "limit", 100, 1, 10000) match {
-        case None => return
-        case Some(v) => v
-      }
-      val mergesStored = loadStored(ex, mergesPath.get, "merges",
-        Seq("rank", "lhs", "rhs")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val rankIntegral = mergesStored.schema("rank").dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (!rankIntegral) {
-        sendJson(ex, 400, detail(s"Merges table ${mergesPath.get} " +
-          "rank column is not an integral column")); return
-      }
-      val nonString = Seq("lhs", "rhs").filter(c =>
-        mergesStored.schema(c).dataType !=
-          org.apache.spark.sql.types.StringType)
-      if (nonString.nonEmpty) {
-        sendJson(ex, 400, detail(s"Merges table ${mergesPath.get} " +
-          s"columns are not strings: ${nonString.mkString(", ")}")); return
-      }
-      // limit(65) bounds the collect whatever the stored table holds;
-      // 65 rows back means the table is over the trainer's cap
-      val mergeRows = mergesStored
-        .select(org.apache.spark.sql.functions.col("rank"),
-          org.apache.spark.sql.functions.col("lhs"),
-          org.apache.spark.sql.functions.col("rhs"))
-        .orderBy(org.apache.spark.sql.functions.col("rank"))
-        .limit(65).collect()
-      if (mergeRows.length > 64) {
-        sendJson(ex, 400, detail(s"Merges table ${mergesPath.get} " +
-          "holds more than 64 merges - not a bpeTrain artifact " +
-          "(the trainer's cap; the list is driver-held apply state)"))
-        return
-      }
-      if (mergeRows.isEmpty) {
-        sendJson(ex, 400, detail(s"Merges table ${mergesPath.get} " +
-          "is empty - the segmenter needs at least one merge (bpeTrain " +
-          "emits zero rows only on a degenerate corpus)")); return
-      }
-      if (mergeRows.exists(r => r.isNullAt(0))) {
-        sendJson(ex, 400, detail(s"Merges table ${mergesPath.get} " +
-          "has a NULL rank")); return
-      }
-      val ranks = mergeRows.map(_.getAs[Number](0).longValue())
-      if (ranks.distinct.length != ranks.length) {
-        sendJson(ex, 400, detail(s"Merges table ${mergesPath.get} " +
-          "has duplicate ranks - the apply order is ambiguous"))
-        return
-      }
-      if (mergeRows.exists(r => r.isNullAt(1) || r.isNullAt(2) ||
-          r.getString(1).isEmpty || r.getString(2).isEmpty)) {
-        sendJson(ex, 400, detail(s"Merges table ${mergesPath.get} " +
-          "has a NULL or empty merge side")); return
-      }
-      if (mergeRows.exists(r =>
-          !(r.getString(1) + r.getString(2)).matches("[a-z0-9]+"))) {
-        sendJson(ex, 400, detail(s"Merges table ${mergesPath.get} " +
-          "has a merge side outside [a-z0-9]+ - not over the " +
-          "segmenter's word alphabet (bpeTrain only ever learns " +
-          "lowercase alphanumeric sides)")); return
-      }
-      val merges = mergeRows.toSeq.map(r => (r.getString(1), r.getString(2)))
-      val missing = Seq(textCol, idCol).filterNot(df.columns.contains)
-      if (missing.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${missing.mkString(", ")}")); return
-      }
-      val idIntegral = df.schema(idCol).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (!idIntegral) {
-        sendJson(ex, 400, detail(
-          s"Id column $idCol is not an integral column")); return
-      }
-      if (df.schema(textCol).dataType !=
-          org.apache.spark.sql.types.StringType) {
-        sendJson(ex, 400, detail(
-          s"Text column $textCol is not a string column")); return
-      }
-      // the expression's own construction contract is the backstop for
-      // any artifact defect the checks above don't name - a broken
-      // stored table is a caller error, not a 500
-      val seg =
-        try graft.ops.TextAnalysis.bpeSegment(df, textCol, idCol, merges)
-        catch {
-          case e: IllegalArgumentException =>
-            sendJson(ex, 400, detail(e.getMessage)); return
-        }
-      // two actions read the plan (capped collect + count) - persist so
-      // the segmentation pass executes once (the r11 constant-factor
-      // class; plain persist with lineage kept, fine outside the lock)
-      seg.persist()
-      val (rows, total) = try {
-        (seg.limit(limit).collect(), seg.count())
-      } finally { seg.unpersist(); () }
-      // a NULL text segments to NULL counts (the expression is
-      // null-intolerant, the SQL convention) - render them as JSON
-      // nulls rather than NPE-500ing the whole response
-      def optLong(r: org.apache.spark.sql.Row, i: Int): Any =
-        if (r.isNullAt(i)) null else r.getLong(i)
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "merges" -> mergesPath.get,
-        "n_merges" -> merges.length.toLong,
-        "n_docs" -> total,
-        "n_returned" -> rows.length.toLong,
-        "docs" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-          "id" -> (if (r.isNullAt(0)) null
-                   else r.getAs[Number](0).longValue()),
-          "n_words" -> optLong(r, 1),
-          "n_chars" -> optLong(r, 2),
-          "n_tokens" -> optLong(r, 3),
-          "seg_prefix" -> (if (r.isNullAt(4)) null else r.getString(4)),
-          "tokens_per_char_ppm" -> optLong(r, 5))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+  private def tokenizeRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val Seq(mergesPath) = p.required("merges")
+    val textCol = p.getOrElse("text", "text")
+    val idCol = p.getOrElse("id", "doc_id")
+    val limit = p.int("limit", 100, 1, 10000)
+    val mergesStored = stored(mergesPath, "merges", Seq("rank", "lhs", "rhs"))
+    def bad(cond: Boolean, why: String): Unit =
+      check(!cond, s"Merges table $mergesPath $why")
+    bad(!isIntegral(mergesStored.schema("rank").dataType),
+      "rank column is not an integral column")
+    val nonString = Seq("lhs", "rhs")
+      .filter(c => mergesStored.schema(c).dataType != StringType)
+    bad(nonString.nonEmpty, s"columns are not strings: ${nonString.mkString(", ")}")
+    // limit(65) bounds the collect whatever the stored table holds;
+    // 65 rows back means the table is over the trainer's cap
+    val mergeRows = mergesStored.select(col("rank"), col("lhs"), col("rhs"))
+      .orderBy(col("rank")).limit(65).collect()
+    bad(mergeRows.length > 64, "holds more than 64 merges - not a bpeTrain " +
+      "artifact (the trainer's cap; the list is driver-held apply state)")
+    bad(mergeRows.isEmpty, "is empty - the segmenter needs at least one " +
+      "merge (bpeTrain emits zero rows only on a degenerate corpus)")
+    bad(mergeRows.exists(_.isNullAt(0)), "has a NULL rank")
+    val ranks = mergeRows.map(_.getAs[Number](0).longValue())
+    bad(ranks.distinct.length != ranks.length,
+      "has duplicate ranks - the apply order is ambiguous")
+    bad(mergeRows.exists(r => r.isNullAt(1) || r.isNullAt(2) ||
+      r.getString(1).isEmpty || r.getString(2).isEmpty),
+      "has a NULL or empty merge side")
+    bad(mergeRows.exists(r => !(r.getString(1) + r.getString(2)).matches("[a-z0-9]+")),
+      "has a merge side outside [a-z0-9]+ - not over the segmenter's word " +
+        "alphabet (bpeTrain only ever learns lowercase alphanumeric sides)")
+    val merges = mergeRows.toSeq.map(r => (r.getString(1), r.getString(2)))
+    knownColumns(df, textCol, idCol)
+    integralCol(df, idCol)
+    stringCol(df, textCol)
+    // the expression's own construction contract is the backstop for
+    // any artifact defect the checks above don't name - a broken
+    // stored table is a caller error, not a 500
+    val seg = callerError(TextAnalysis.bpeSegment(df, textCol, idCol, merges))
+    // two actions read the plan (capped collect + count) - persist so
+    // the segmentation pass executes once (the r11 constant-factor
+    // class; plain persist with lineage kept, fine outside the lock)
+    seg.persist()
+    val (rows, total) = try (seg.limit(limit).collect(), seg.count())
+      finally seg.unpersist()
+    // a NULL text segments to NULL counts (the expression is
+    // null-intolerant, the SQL convention) - render them as JSON
+    // nulls rather than NPE-500ing the whole response
+    Json.obj(
+      "table" -> tablePath,
+      "merges" -> mergesPath,
+      "n_merges" -> merges.length.toLong,
+      "n_docs" -> total,
+      "n_returned" -> rows.length.toLong,
+      "docs" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+        "id" -> (if (r.isNullAt(0)) null else r.getAs[Number](0).longValue()),
+        "n_words" -> optLong(r, 1),
+        "n_chars" -> optLong(r, 2),
+        "n_tokens" -> optLong(r, 3),
+        "seg_prefix" -> (if (r.isNullAt(4)) null else r.getString(4)),
+        "tokens_per_char_ppm" -> optLong(r, 5)))))
   }
 
   /** Two-dimensional box query over a STORED Z-order layout
@@ -2679,151 +1612,33 @@ final class HttpFacade(
     * to the curve segment the box intersects. Full-row retrieval is
     * the SQL surface's job; this route's value is the enumeration a
     * plain WHERE cannot plan. Read-only, outside the op lock. */
-  private def boxSearchRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val store = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val boundsPath = qp.get("bounds").filter(_.nonEmpty)
-      val colA = qp.get("col_a").filter(_.nonEmpty)
-      val colB = qp.get("col_b").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (boundsPath.isEmpty || colA.isEmpty || colB.isEmpty ||
-          idCol.isEmpty) {
-        sendJson(ex, 400, detail(
-          "bounds, col_a, col_b and id parameters are required")); return
-      }
-      def longParam(name: String): Option[Long] =
-        qp.get(name).flatMap(_.toLongOption) match {
-          case None =>
-            sendJson(ex, 400,
-              detail(s"$name must be a long integer")); None
-          case some => some
-        }
-      val (loA, hiA, loB, hiB) = (longParam("lo_a"), longParam("hi_a"),
-        longParam("lo_b"), longParam("hi_b")) match {
-        case (Some(a), Some(b), Some(c), Some(d)) => (a, b, c, d)
-        case _ => return
-      }
-      val limit = intParam(ex, qp, "limit", 1000, 1, 100000) match {
-        case None => return
-        case Some(v) => v
-      }
-      val bounds = loadStored(ex, boundsPath.get, "bounds",
-        Seq("min_a", "max_a", "min_b", "max_b", "bits",
-          "n_buckets")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val missing = Seq(colA.get, colB.get, idCol.get)
-        .filterNot(store.columns.contains)
-      if (missing.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${missing.mkString(", ")}")); return
-      }
-      val idIntegral = store.schema(idCol.get).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (!idIntegral) {
-        sendJson(ex, 400, detail(
-          s"Id column ${idCol.get} is not an integral column")); return
-      }
-      val matched =
-        try graft.ops.Layout.boxProbeTables(store, bounds,
-          colA.get, colB.get, loA, hiA, loB, hiB)
-        catch {
-          case e: IllegalArgumentException =>
-            sendJson(ex, 400, detail(e.getMessage)); return
-        }
-      val c = org.apache.spark.sql.functions.col(idCol.get)
-      // two actions (count, capped ids) - persist so the pruned scan
-      // and residual filter run once
-      matched.persist()
-      val (n, ids) = try {
-        (matched.count(),
-          matched.select(c).orderBy(c).limit(limit)
-            .collect().map(_.getAs[Number](0).longValue()))
-      } finally { matched.unpersist(); () }
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "bounds" -> boundsPath.get,
-        "n_matched" -> n,
-        "n_returned" -> ids.length.toLong,
-        "ids" -> ids.toSeq.map(v => Json.Raw(v.toString))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
-  }
-
-  /** Cardinality from a STORED sketch (`?sketch=<ns.table>[&k=256]`):
-    * graft.ops.Sketches.kmvMerge + kmvEstimate over the x14 artifact's
-    * rows — the serving read of the mergeable-sketch family: any union
-    * of per-shard sketch rows (including post-append states) answers
-    * "how many distinct values does the release hold" from ≤ shards·k
-    * stored rows, no corpus read anywhere. Catalog-level route (a
-    * sketch table stands alone — it audits a release, not one corpus
-    * table; the release-audit precedent). `k` must not exceed the k
-    * the sketches were BUILT with — merging k' > k per-shard sketches
-    * under-fills and the estimate degrades toward the per-shard caps —
-    * so the route reports n_hashes for the caller to sanity-check.
-    * Both columns must be integral (a string hash column would compare
-    * lexicographically and silently corrupt the k-minimum merge). */
-  private def distinctSketchRoute(ex: HttpExchange): Unit = {
-    val qp = queryParams(ex)
-    val sketchPath = qp.get("sketch").filter(_.nonEmpty)
-    if (sketchPath.isEmpty) {
-      sendJson(ex, 400, detail("sketch parameter is required")); return
-    }
-    val k = intParam(ex, qp, "k", 256, 2, 1 << 20) match {
-      case None => return
-      case Some(v) => v
-    }
-    try {
-      val sk = loadStored(ex, sketchPath.get, "sketch",
-        Seq("shard", "h")) match {
-        case None => return
-        case Some(t) => t
-      }
-      def integral(c: String): Boolean = sk.schema(c).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      for (c <- Seq("shard", "h") if !integral(c)) {
-        sendJson(ex, 400,
-          detail(s"Sketch column $c is not an integral column")); return
-      }
-      val est = graft.ops.Sketches.kmvEstimate(
-        graft.ops.Sketches.kmvMerge(sk, k), k).collect()(0)
-      val nShards = sk.agg(
-        org.apache.spark.sql.functions.count_distinct(
-          org.apache.spark.sql.functions.col("shard")))
-        .collect()(0).getLong(0)
-      sendJson(ex, 200, Json.obj(
-        "sketch" -> sketchPath.get,
-        "k" -> k.toLong,
-        "n_shards" -> nShards,
-        "n_hashes" -> est.getLong(1),
-        "kth_min" -> (if (est.isNullAt(2)) 0L else est.getLong(2)),
-        "est" -> est.getLong(3)))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+  private def boxSearchRoute(tablePath: String, store: DataFrame, p: Params): String = {
+    val Seq(boundsPath, colA, colB, idCol) =
+      p.required("bounds", "col_a", "col_b", "id")
+    def longParam(name: String) = p.strictLong(name, s"$name must be a long integer")
+    val (loA, hiA, loB, hiB) =
+      (longParam("lo_a"), longParam("hi_a"), longParam("lo_b"), longParam("hi_b"))
+    val limit = p.int("limit", 1000, 1, 100000)
+    val bounds = stored(boundsPath, "bounds",
+      Seq("min_a", "max_a", "min_b", "max_b", "bits", "n_buckets"))
+    knownColumns(store, colA, colB, idCol)
+    integralCol(store, idCol)
+    val matched = callerError(
+      Layout.boxProbeTables(store, bounds, colA, colB, loA, hiA, loB, hiB))
+    val c = col(idCol)
+    // two actions (count, capped ids) - persist so the pruned scan
+    // and residual filter run once
+    matched.persist()
+    val (n, ids) = try {
+      (matched.count(), matched.select(c).orderBy(c).limit(limit)
+        .collect().map(_.getAs[Number](0).longValue()))
+    } finally matched.unpersist()
+    Json.obj(
+      "table" -> tablePath,
+      "bounds" -> boundsPath,
+      "n_matched" -> n,
+      "n_returned" -> ids.length.toLong,
+      "ids" -> ids.toSeq.map(v => Json.Raw(v.toString)))
   }
 
   /** Membership check against a STORED Bloom filter
@@ -2839,91 +1654,114 @@ final class HttpFacade(
     * REQUIRED and `k` must match the build (the d19 geometry contract:
     * a mismatch silently yields false negatives — the one thing a
     * Bloom filter must never do — so the route refuses to default it). */
-  private def bloomCheckRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
+  private def bloomCheckRoute(tablePath: String, df: DataFrame, p: Params): String = {
+    val Seq(filterPath, valueCol, idCol) = p.required("filter", "value", "id")
+    check(p.contains("n_words"), "n_words is required (the filter's build " +
+      "geometry - a defaulted mismatch would silently yield false negatives)")
+    val nWords = p.int("n_words", 0, 1, 1 << 28)
+    val k = p.int("k", 4, 1, 64)
+    val limit = p.int("limit", 1000, 1, 100000)
+    val filt = stored(filterPath, "filter", Seq("w", "bits"))
+    knownColumns(df, valueCol, idCol)
+    integralCol(df, idCol)
+    val merged = Bloom.bloomMerge(filt.select(col("w"), col("bits")))
+    val probed = Bloom.bloomProbe(merged, df, valueCol, nWords, k)
+    val hitCol = col("bloom_hit")
+    val idC = col(idCol)
+    // three actions (total, hits, capped misses) - persist so the
+    // k-position explode + broadcast join run once
+    probed.persist()
+    val (nTotal, nHits, missIds) = try {
+      (probed.count(), probed.filter(hitCol).count(),
+        probed.filter(!hitCol).select(idC).orderBy(idC)
+          .limit(limit).collect().map(_.getAs[Number](0).longValue()))
+    } finally probed.unpersist()
+    Json.obj(
+      "table" -> tablePath,
+      "filter" -> filterPath,
+      "n_values" -> nTotal,
+      "n_hits" -> nHits,
+      "n_misses" -> (nTotal - nHits),
+      "n_returned" -> missIds.length.toLong,
+      "miss_ids" -> missIds.toSeq.map(v => Json.Raw(v.toString)))
+  }
+
+  // ------------------------------------------- catalog-level probe handlers
+
+  /** Release-wide freshness audit
+    * (`GET /api/v1/catalog/release-audit?families=<spec>[;<spec>...]`,
+    * each spec `name:corpus.table:id_col:index.table:index_id_col`):
+    * the x13 dashboard served as a CATALOG-level route — it audits a
+    * whole release, so unlike the per-table probe routes it hangs off
+    * no single `{tablePath}`. Every family is validated like
+    * index-audit's pair (dotted paths, existence, integral id columns
+    * — surfaced as 400s/404s naming the family), then one
+    * [[graft.ops.Profile.releaseAudit]] run returns the per-family
+    * verdict rows (n_corpus / n_indexed / n_covered / n_unindexed /
+    * n_orphaned / fresh_ppm), family-ordered. At most 16 families — a
+    * release dashboard, not a batch join. Read-only, |families| × two
+    * pruned id columns, outside the op lock. */
+  private def releaseAuditRoute(p: Params): String = {
+    val shape = "name:corpus.table:id_col:index.table:index_id_col"
+    val famRaw = p.get("families")
+      .getOrElse(reject(400, s"families parameter is required ($shape;...)"))
+    val specs = famRaw.split(";").toSeq.map(_.trim).filter(_.nonEmpty)
+    check(specs.nonEmpty && specs.length <= 16,
+      "families must list 1 to 16 specs — a release dashboard, not a batch join")
+    val parsed = specs.map(_.split(":", -1).toSeq)
+    parsed.find(_.length != 5).foreach(bad => reject(400,
+      s"Invalid family spec '${bad.mkString(":")}' — expected $shape"))
+    val names = parsed.map(_.head)
+    check(names.distinct.length == names.length, "family names must be distinct")
+    val families = parsed.map { case Seq(name, corpusPath, idCol, indexPath, indexIdCol) =>
+      val corpus = stored(corpusPath, s"family '$name' corpus", Seq(idCol))
+      val index = stored(indexPath, s"family '$name' index", Seq(indexIdCol))
+      // the indexAudit contract surfaced per family: a non-integral
+      // id would cast to null and report a fresh index fully stale
+      integralCol(corpus, idCol, s"Family '$name' id")
+      integralCol(index, indexIdCol, s"Family '$name' index id")
+      (name, corpus, idCol, index, indexIdCol)
     }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val filterPath = qp.get("filter").filter(_.nonEmpty)
-      val valueCol = qp.get("value").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (filterPath.isEmpty || valueCol.isEmpty || idCol.isEmpty) {
-        sendJson(ex, 400, detail(
-          "filter, value and id parameters are required")); return
-      }
-      if (!qp.contains("n_words")) {
-        sendJson(ex, 400, detail("n_words is required (the filter's " +
-          "build geometry - a defaulted mismatch would silently yield " +
-          "false negatives)")); return
-      }
-      val nWords = intParam(ex, qp, "n_words", 0, 1, 1 << 28) match {
-        case None => return
-        case Some(v) => v
-      }
-      val k = intParam(ex, qp, "k", 4, 1, 64) match {
-        case None => return
-        case Some(v) => v
-      }
-      val limit = intParam(ex, qp, "limit", 1000, 1, 100000) match {
-        case None => return
-        case Some(v) => v
-      }
-      val filt = loadStored(ex, filterPath.get, "filter",
-        Seq("w", "bits")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val missing = Seq(valueCol.get, idCol.get)
-        .filterNot(df.columns.contains)
-      if (missing.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${missing.mkString(", ")}")); return
-      }
-      val idIntegral = df.schema(idCol.get).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      if (!idIntegral) {
-        sendJson(ex, 400, detail(
-          s"Id column ${idCol.get} is not an integral column")); return
-      }
-      val merged = graft.ops.Bloom.bloomMerge(
-        filt.select(org.apache.spark.sql.functions.col("w"),
-          org.apache.spark.sql.functions.col("bits")))
-      val probed = graft.ops.Bloom.bloomProbe(merged, df,
-        valueCol.get, nWords, k)
-      val hitCol = org.apache.spark.sql.functions.col("bloom_hit")
-      val idC = org.apache.spark.sql.functions.col(idCol.get)
-      // three actions (total, hits, capped misses) - persist so the
-      // k-position explode + broadcast join run once
-      probed.persist()
-      val (nTotal, nHits, missIds) = try {
-        (probed.count(), probed.filter(hitCol).count(),
-          probed.filter(!hitCol).select(idC).orderBy(idC)
-            .limit(limit).collect().map(_.getAs[Number](0).longValue()))
-      } finally { probed.unpersist(); () }
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "filter" -> filterPath.get,
-        "n_values" -> nTotal,
-        "n_hits" -> nHits,
-        "n_misses" -> (nTotal - nHits),
-        "n_returned" -> missIds.length.toLong,
-        "miss_ids" -> missIds.toSeq.map(v => Json.Raw(v.toString))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+    val rows = Profile.releaseAudit(families).collect()
+    Json.obj(
+      "n_families" -> rows.length.toLong,
+      "families" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+        "family" -> r.getString(0),
+        "n_corpus" -> r.getLong(1),
+        "n_indexed" -> r.getLong(2),
+        "n_covered" -> r.getLong(3),
+        "n_unindexed" -> r.getLong(4),
+        "n_orphaned" -> r.getLong(5),
+        "fresh_ppm" -> r.getLong(6)))))
+  }
+
+  /** Cardinality from a STORED sketch (`?sketch=<ns.table>[&k=256]`):
+    * graft.ops.Sketches.kmvMerge + kmvEstimate over the x14 artifact's
+    * rows — the serving read of the mergeable-sketch family: any union
+    * of per-shard sketch rows (including post-append states) answers
+    * "how many distinct values does the release hold" from ≤ shards·k
+    * stored rows, no corpus read anywhere. Catalog-level route (a
+    * sketch table stands alone — it audits a release, not one corpus
+    * table; the release-audit precedent). `k` must not exceed the k
+    * the sketches were BUILT with — merging k' > k per-shard sketches
+    * under-fills and the estimate degrades toward the per-shard caps —
+    * so the route reports n_hashes for the caller to sanity-check.
+    * Both columns must be integral (a string hash column would compare
+    * lexicographically and silently corrupt the k-minimum merge). */
+  private def distinctSketchRoute(p: Params): String = {
+    val Seq(sketchPath) = p.required("sketch")
+    val k = p.int("k", 256, 2, 1 << 20)
+    val sk = stored(sketchPath, "sketch", Seq("shard", "h"))
+    for (c <- Seq("shard", "h")) integralCol(sk, c, "Sketch")
+    val est = Sketches.kmvEstimate(Sketches.kmvMerge(sk, k), k).collect()(0)
+    val nShards = sk.agg(count_distinct(col("shard"))).collect()(0).getLong(0)
+    Json.obj(
+      "sketch" -> sketchPath,
+      "k" -> k.toLong,
+      "n_shards" -> nShards,
+      "n_hashes" -> est.getLong(1),
+      "kth_min" -> (if (est.isNullAt(2)) 0L else est.getLong(2)),
+      "est" -> est.getLong(3))
   }
 
   /** Quantile estimates from a STORED histogram sketch
@@ -2936,352 +1774,32 @@ final class HttpFacade(
     * envelope decodes wrong values silently, so they belong in the
     * caller's release config beside the table name). Catalog-level
     * route, read-only, outside the op lock. */
-  private def quantileSketchRoute(ex: HttpExchange): Unit = {
-    val qp = queryParams(ex)
-    val sketchPath = qp.get("sketch").filter(_.nonEmpty)
-    if (sketchPath.isEmpty) {
-      sendJson(ex, 400, detail("sketch parameter is required")); return
-    }
-    def longParam(name: String): Option[Long] =
-      qp.get(name).flatMap(_.toLongOption) match {
-        case None =>
-          sendJson(ex, 400,
-            detail(s"$name is required and must be a long integer")); None
-        case some => some
-      }
-    val (lo, hi) = (longParam("lo"), longParam("hi")) match {
-      case (Some(a), Some(b)) => (a, b)
-      case _ => return
-    }
-    val nBins = intParam(ex, qp, "n_bins", 64, 2, 1 << 20) match {
-      case None => return
-      case Some(v) => v
-    }
-    if (lo > hi) {
-      sendJson(ex, 400, detail(s"lo must be <= hi, got [$lo, $hi]"))
-      return
-    }
-    val qs = qp.getOrElse("q", "500000").split(",").toSeq
-      .map(_.trim).filter(_.nonEmpty)
-    val qsPpm = qs.map(_.toLongOption)
-    if (qsPpm.isEmpty || qsPpm.exists(_.isEmpty) ||
-        qsPpm.flatten.exists(q => q < 1 || q > 1000000)) {
-      sendJson(ex, 400, detail(
-        "q must be comma-separated ppm ranks in [1, 1000000]")); return
-    }
-    try {
-      val sk = loadStored(ex, sketchPath.get, "sketch",
-        Seq("shard", "bin", "n")) match {
-        case None => return
-        case Some(t) => t
-      }
-      val rows = graft.ops.Sketches.histQuantiles(
-        graft.ops.Sketches.histMerge(sk), qsPpm.flatten, lo, hi, nBins)
-        .collect()
-      sendJson(ex, 200, Json.obj(
-        "sketch" -> sketchPath.get,
-        "lo" -> lo, "hi" -> hi, "n_bins" -> nBins.toLong,
-        "n_total" -> (if (rows.isEmpty) 0L else rows.head.getLong(4)),
-        "quantiles" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-          "q_ppm" -> r.getInt(0).toLong,
-          "rank" -> r.getLong(1),
-          "bin" -> r.getInt(2).toLong,
-          "est_lo" -> r.getLong(3))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
+  private def quantileSketchRoute(p: Params): String = {
+    val Seq(sketchPath) = p.required("sketch")
+    def longParam(name: String) =
+      p.strictLong(name, s"$name is required and must be a long integer")
+    val (lo, hi) = (longParam("lo"), longParam("hi"))
+    val nBins = p.int("n_bins", 64, 2, 1 << 20)
+    check(lo <= hi, s"lo must be <= hi, got [$lo, $hi]")
+    val qsPpm = p.getOrElse("q", "500000").split(",").toSeq
+      .map(_.trim).filter(_.nonEmpty).map(_.toLongOption)
+    check(qsPpm.nonEmpty && qsPpm.forall(_.exists(q => q >= 1 && q <= 1000000)),
+      "q must be comma-separated ppm ranks in [1, 1000000]")
+    val sk = stored(sketchPath, "sketch", Seq("shard", "bin", "n"))
+    val rows = Sketches.histQuantiles(Sketches.histMerge(sk), qsPpm.flatten,
+      lo, hi, nBins).collect()
+    Json.obj(
+      "sketch" -> sketchPath,
+      "lo" -> lo, "hi" -> hi, "n_bins" -> nBins.toLong,
+      "n_total" -> (if (rows.isEmpty) 0L else rows.head.getLong(4)),
+      "quantiles" -> rows.toSeq.map(r => Json.Raw(Json.obj(
+        "q_ppm" -> r.getInt(0).toLong,
+        "rank" -> r.getLong(1),
+        "bin" -> r.getInt(2).toLong,
+        "est_lo" -> r.getLong(3)))))
   }
 
-  /** LSH index-shape planner over any catalog table
-    * (`?text=<col>&id=<col>[&num_hashes=128][&floor=0.5]
-    * [&target_min_ppm=950000]`): graft.ops.Dedup.lshPlan priced on the
-    * corpus's OWN verified >= floor pairs, plus Dedup.pickLsh's
-    * decision — the cheapest bands x rows factorization of the
-    * num_hashes signature whose WORST verified pair is still detected
-    * with probability >= target_min_ppm. This closes the tuning loop the
-    * parameterized data-card opened: the card sweeps thresholds, this
-    * route picks the index shape that detects them — what d17 runs
-    * programmatically, drivable from the UI. The surface is
-    * d(num_hashes) rows (divisor-count-sized, <= 34 for any
-    * num_hashes <= 1024), so the whole table ships in the response; the
-    * corpus is priced ONCE (pickLsh reuses the collected surface rather
-    * than re-running the pair join). Validation follows the
-    * shard-manifest conventions. */
-  private def lshPlanRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val textCol = qp.get("text").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      if (textCol.isEmpty || idCol.isEmpty) {
-        sendJson(ex, 400,
-          detail("text and id parameters are required")); return
-      }
-      val unknown = Seq(textCol.get, idCol.get).filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      if (df.schema(textCol.get).dataType !=
-          org.apache.spark.sql.types.StringType) {
-        sendJson(ex, 400,
-          detail(s"Text column ${textCol.get} is not a string column"))
-        return
-      }
-      val numHashes = qp.get("num_hashes").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("num_hashes must be an integer")); return
-        case Some(Some(n)) => n
-        case None => 128
-      }
-      if (numHashes < 1 || numHashes > 1024) {
-        sendJson(ex, 400,
-          detail("num_hashes must be between 1 and 1024")); return
-      }
-      val floor = qp.get("floor").map(_.toDoubleOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("floor must be a number")); return
-        case Some(Some(f)) if f.isNaN || f <= 0.0 || f > 1.0 =>
-          sendJson(ex, 400, detail("floor must be in (0, 1]")); return
-        case Some(Some(f)) => f
-        case None => 0.5
-      }
-      val targetMinPpm = qp.get("target_min_ppm").map(_.toLongOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("target_min_ppm must be an integer")); return
-        case Some(Some(t)) => t
-        case None => 950000L
-      }
-      if (targetMinPpm < 0 || targetMinPpm > 1000000L) {
-        sendJson(ex, 400,
-          detail("target_min_ppm must be between 0 and 1000000")); return
-      }
-      // lshPlan localCheckpoints its verified-pair set — release it
-      // under the op-sweep discipline (withOpSweep)
-      val rows = withOpSweep {
-        graft.ops.Dedup.lshPlan(df, textCol.get, idCol.get,
-          numHashes = numHashes, floorThreshold = floor).collect()
-      }
-      val (pb, pr) = graft.ops.Dedup.pickLsh(
-        rows.toSeq.map(r => (r.getInt(0), r.getInt(1), r.getLong(3),
-          r.getLong(6))), targetMinPpm)
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "text" -> textCol.get,
-        "id" -> idCol.get,
-        "num_hashes" -> numHashes.toLong,
-        "floor" -> floor,
-        "target_min_ppm" -> targetMinPpm,
-        "picked_bands" -> pb.toLong,
-        "picked_rows_per_band" -> pr.toLong,
-        "plan" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-          "bands" -> r.getInt(0).toLong,
-          "rows_per_band" -> r.getInt(1).toLong,
-          "index_rows" -> r.getLong(2),
-          "n_pairs" -> r.getLong(3),
-          "exp_found_ppm" -> r.getLong(4),
-          "mean_p_ppm" -> r.getLong(5),
-          "min_p_ppm" -> r.getLong(6))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
-  }
-
-  /** Per-document realization of the mixture allocation
-    * (`?domain=<col>&id=<col>&weight=<col>&budget=<long>[&epochs=<int>]
-    * [&limit=<int>]`): graft.ops.Sampling.epochPlan — how many copies of
-    * each document enter the training mix so each domain spends exactly
-    * its water-filled allocation (whole epochs for every doc + one extra
-    * copy for the greedy md5-ordered fractional prefix). The response
-    * carries the domain-sized rollup (n_docs, full_epochs, n_extra,
-    * total_copies — the proof the realization sums back to the
-    * allocation) plus the first `limit` per-doc rows by id (default 100,
-    * cap 1000): the realization is corpus-sized, so the full plan is a
-    * dataset to write, not a payload to serve. Same `maxLabels` bound on
-    * domain cardinality as the mixture route. */
-  private def epochPlanRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val qp = queryParams(ex)
-      val domain = qp.get("domain").filter(_.nonEmpty)
-      val idCol = qp.get("id").filter(_.nonEmpty)
-      val weight = qp.get("weight").filter(_.nonEmpty)
-      val budget = qp.get("budget").flatMap(_.toLongOption)
-      val epochs = qp.get("epochs").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("epochs must be an integer")); return
-        case Some(Some(e)) => e
-        case None => 2
-      }
-      val limit = qp.get("limit").map(_.toIntOption) match {
-        case Some(None) => sendJson(ex, 400,
-          detail("limit must be an integer")); return
-        case Some(Some(l)) => l
-        case None => 100
-      }
-      if (domain.isEmpty || idCol.isEmpty || weight.isEmpty) {
-        sendJson(ex, 400,
-          detail("domain, id and weight parameters are required")); return
-      }
-      if (budget.isEmpty || budget.exists(_ < 0)) {
-        sendJson(ex, 400,
-          detail("budget parameter is required and must be >= 0")); return
-      }
-      if (epochs < 1) {
-        sendJson(ex, 400, detail("epochs must be >= 1")); return
-      }
-      if (limit < 0 || limit > 1000) {
-        sendJson(ex, 400,
-          detail("limit must be between 0 and 1000")); return
-      }
-      val unknown = Seq(domain.get, idCol.get, weight.get)
-        .filterNot(df.columns.contains)
-      if (unknown.nonEmpty) {
-        sendJson(ex, 400,
-          detail(s"Unknown columns: ${unknown.mkString(", ")}")); return
-      }
-      val numeric = df.schema(weight.get).dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType]
-      if (!numeric) {
-        sendJson(ex, 400,
-          detail(s"Weight column ${weight.get} is not numeric")); return
-      }
-      val groupable = df.schema(domain.get).dataType match {
-        case _: org.apache.spark.sql.types.MapType => false
-        case _ => true
-      }
-      if (!groupable) {
-        sendJson(ex, 400, detail(
-          s"Column ${domain.get} is not groupable (map type)")); return
-      }
-      import org.apache.spark.sql.functions.{col, count, expr, lit, min, sum}
-      val maxLabels = 1000
-      withOpSweep {
-      val plan = graft.ops.Sampling.epochPlan(df, domain.get, idCol.get,
-        weight.get, expr(s"avail * $epochs"), budget.get).persist()
-      try {
-        // full_epochs = min(n_copies): the fractional prefix never covers
-        // a whole domain (frac < avail), so some doc always sits at the
-        // whole-epoch floor
-        val rollup = plan.groupBy(col("domain"))
-          .agg(count(lit(1)).as("n_docs"),
-            min(col("n_copies")).as("full_epochs"),
-            sum(col("n_copies")).as("total_copies"),
-            sum(col("n_copies") * col("w")).as("spent_weight"))
-          .orderBy(col("domain").asc_nulls_last)
-          .limit(maxLabels + 1).collect()
-        if (rollup.length > maxLabels) {
-          sendJson(ex, 400, detail(
-            s"Column ${domain.get} has more than $maxLabels distinct " +
-              "values — epoch plans are for domain-like columns")); return
-        }
-        // the documented "first `limit` per-doc rows by id": an explicit
-        // sort makes the capped sample deterministic across identical
-        // requests (same convention as shard-manifest / dedup-probe)
-        val sample = plan.orderBy(col("id")).limit(limit).collect()
-        sendJson(ex, 200, Json.obj(
-          "table" -> tablePath,
-          "domain" -> domain.get,
-          "id" -> idCol.get,
-          "weight" -> weight.get,
-          "budget" -> budget.get,
-          "epochs_cap" -> epochs.toLong,
-          "domains" -> rollup.toSeq.map(r => Json.Raw(Json.obj(
-            "domain" -> (if (r.isNullAt(0)) null else String.valueOf(r.get(0))),
-            "n_docs" -> r.getLong(1),
-            "full_epochs" -> r.getLong(2),
-            "n_extra" -> (r.getLong(3) - r.getLong(2) * r.getLong(1)),
-            "total_copies" -> r.getLong(3),
-            "spent_weight" -> r.getLong(4)))),
-          "sample" -> sample.toSeq.map(r => Json.Raw(Json.obj(
-            "id" -> String.valueOf(r.get(0)),
-            "domain" -> (if (r.isNullAt(1)) null else String.valueOf(r.get(1))),
-            "w" -> r.getLong(2),
-            "n_copies" -> r.getLong(3))))))
-      } finally plan.unpersist()
-      }
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
-  }
-
-  /** Class-balance report of one column (`?column=` required): per-value
-    * counts, ppm shares, and the corpus Gini impurity
-    * (graft.ops.Profile.classBalance — one keyed aggregation). The label
-    * cardinality bounds the response; a high-cardinality column is a
-    * caller error surfaced as 400 when more than `maxLabels` (default
-    * 1000) rows come back — balance reports are for label-like columns. */
-  private def balanceRoute(ex: HttpExchange, tablePath: String): Unit = {
-    val parts = tablePath.split("\\.").toSeq
-    if (parts.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid table path: $tablePath")); return
-    }
-    val (ns, table) = (parts.init, parts.last)
-    try {
-      if (!provider.tableExists(ns, table)) {
-        sendJson(ex, 404, detail(s"Table not found: $tablePath")); return
-      }
-      val df = spark.table(tablePath)
-      val column = queryParams(ex).get("column").filter(_.nonEmpty)
-      if (column.isEmpty) {
-        sendJson(ex, 400, detail("column parameter is required")); return
-      }
-      if (!df.columns.contains(column.get)) {
-        sendJson(ex, 400, detail(s"Unknown column: ${column.get}")); return
-      }
-      // same convention as profileRoute: an explicitly requested
-      // non-groupable column (map/array/struct) is a caller error — 400,
-      // not a raw AnalysisException surfaced as 500
-      val groupable = df.schema(column.get).dataType match {
-        case _: org.apache.spark.sql.types.MapType => false
-        case _ => true
-      }
-      if (!groupable) {
-        sendJson(ex, 400, detail(
-          s"Column ${column.get} is not groupable (map type)")); return
-      }
-      val maxLabels = 1000
-      val rows = graft.ops.Profile.classBalance(df, column.get)
-        .limit(maxLabels + 1).collect()
-      if (rows.length > maxLabels) {
-        sendJson(ex, 400, detail(
-          s"Column ${column.get} has more than $maxLabels distinct " +
-            "values — balance reports are for label-like columns")); return
-      }
-      sendJson(ex, 200, Json.obj(
-        "table" -> tablePath,
-        "column" -> column.get,
-        "gini_ppm" -> (if (rows.isEmpty) null
-                       else java.lang.Long.valueOf(rows.head.getLong(3))),
-        "balance" -> rows.toSeq.map(r => Json.Raw(Json.obj(
-          "label" -> (if (r.isNullAt(0)) null
-                      else String.valueOf(r.get(0))),
-          "n" -> r.getLong(1),
-          "share_ppm" -> r.getLong(2))))))
-    } catch {
-      case e: graft.catalog.NoSuchEntityException =>
-        sendJson(ex, 404, detail(e.getMessage))
-    }
-  }
+  // ------------------------------------------------------------ health
 
   private def health(ex: HttpExchange): Unit = {
     val h = GraftEngine.healthCheck(spark)
@@ -3315,73 +1833,205 @@ final class HttpFacade(
         "reason" -> Option(e.getMessage).getOrElse("Health check failed")))
     }
 
-  // ---------------------------------------------------------------- helpers
+  // ------------------------------------------- rejection and resolvers
 
-  /** Parse + shape-validate a stored-artifact table reference — the
-    * check shared by every probe route (dedup-probe's index,
-    * ann-search's index/centroids, bm25-search's stats,
-    * incremental-build's existing=): dotted path (400), existence
-    * (404), required columns (400). Sends the error itself; None =
-    * rejected. `what` names the parameter in the messages. */
-  private def loadStored(ex: HttpExchange, path: String, what: String,
-      required: Seq[String]): Option[org.apache.spark.sql.DataFrame] = {
-    val p = path.split("\\.").toSeq
-    if (p.length < 2) {
-      sendJson(ex, 400, detail(s"Invalid $what table path: $path"))
-      return None
-    }
-    if (!provider.tableExists(p.init, p.last)) {
-      sendJson(ex, 404, detail(s"${what.capitalize} table not " +
-        s"found: $path"))
-      return None
-    }
-    val t = spark.table(path)
-    val missing = required.filterNot(t.columns.contains)
-    if (missing.nonEmpty) {
-      sendJson(ex, 400, detail(s"${what.capitalize} table $path is " +
-        s"missing columns: ${missing.mkString(", ")}"))
-      return None
-    }
-    Some(t)
+  private def reject(code: Int, msg: String): Nothing =
+    throw new HttpFacade.Reject(code, msg)
+
+  private def check(ok: Boolean, msg: => String): Unit = if (!ok) reject(400, msg)
+
+  /** An operator's `require` on the caller's inputs is a 400, not a 500. */
+  private def callerError[A](body: => A): A =
+    try body catch { case e: IllegalArgumentException => reject(400, e.getMessage) }
+
+  /** A dotted `ns.table` path split into (namespace, table); 400 when it
+    * has no namespace. `label` names the table in the message. */
+  private def tableName(path: String, label: String = "table"): (Seq[String], String) = {
+    val parts = path.split("\\.").toSeq
+    check(parts.length >= 2, s"Invalid $label path: $path")
+    (parts.init, parts.last)
   }
 
-  /** Bounded-integer query parameter with a default — the validation
-    * shared by the probe routes' k/nprobe/limit/shingle_len surface.
-    * Sends the 400 itself; None = rejected. */
-  private def intParam(ex: HttpExchange, qp: Map[String, String],
-      name: String, dflt: Int, lo: Int, hi: Int): Option[Int] =
-    qp.get(name).map(_.toIntOption) match {
-      case Some(None) =>
-        sendJson(ex, 400, detail(s"$name must be an integer")); None
-      case Some(Some(v)) if v < lo || v > hi =>
-        sendJson(ex, 400,
-          detail(s"$name must be between $lo and $hi")); None
-      case Some(Some(v)) => Some(v)
-      case None => Some(dflt)
-    }
+  /** The one table resolver: dotted path (400), existence (404), then
+    * `spark.table`. */
+  private def resolve(path: String, label: String = "table"): DataFrame = {
+    val (ns, table) = tableName(path, label)
+    if (!provider.tableExists(ns, table))
+      reject(404, s"${label.capitalize} not found: $path")
+    spark.table(path)
+  }
 
-  private def withQueryId(ex: HttpExchange, id: String)(f: UUID => Unit): Unit =
-    parseUuid(id) match {
-      case Some(uuid) => f(uuid)
-      case None => sendJson(ex, 400, detail(s"Invalid query ID format: $id"))
-    }
+  /** A stored-artifact table named by a parameter (an index, centroids,
+    * stats, an existing build, ...): resolved like `{tablePath}`, plus
+    * its required columns (400). `what` names it in the messages. */
+  private def stored(path: String, what: String, required: Seq[String]): DataFrame = {
+    val t = resolve(path, s"$what table")
+    val missing = required.filterNot(t.columns.contains)
+    check(missing.isEmpty, s"${what.capitalize} table $path is " +
+      s"missing columns: ${missing.mkString(", ")}")
+    t
+  }
+
+  /** The query resolver: a well-formed id (400) of a registered query (404). */
+  private def query(id: String): QueryResult =
+    executor.getStatus(queryUuid(id)).getOrElse(reject(404, s"Query not found: $id"))
+
+  private def queryUuid(id: String): UUID =
+    parseUuid(id).getOrElse(reject(400, s"Invalid query ID format: $id"))
 
   private def parseUuid(id: String): Option[UUID] =
     try Some(UUID.fromString(id)) catch { case _: IllegalArgumentException => None }
 
-  private def detail(msg: String): String = Json.obj("detail" -> msg)
+  /** A flat JSON request body; a body that does not parse is a 400. */
+  private def jsonBody(ex: HttpExchange): Map[String, Any] = {
+    val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
+    try Json.parseObject(body) catch {
+      case e: RuntimeException => reject(400, "Invalid JSON body: " +
+        Option(e.getMessage).getOrElse(e.toString).stripPrefix("requirement failed: "))
+    }
+  }
 
-  private def readBody(ex: HttpExchange): String =
-    new String(ex.getRequestBody.readAllBytes(), UTF_8)
+  // ----------------------------------------------- column-shape checks
 
-  private def queryParams(ex: HttpExchange): Map[String, String] =
-    Option(ex.getRequestURI.getQuery).map(_.split("&").toSeq
+  private def knownColumns(df: DataFrame, cols: String*): Unit = {
+    val unknown = cols.filterNot(df.columns.contains)
+    check(unknown.isEmpty, s"Unknown columns: ${unknown.mkString(", ")}")
+  }
+
+  private def isIntegral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  private def integralCol(df: DataFrame, c: String, what: String = "Id"): Unit =
+    check(isIntegral(df.schema(c).dataType), s"$what column $c is not an integral column")
+
+  private def stringCol(df: DataFrame, c: String): Unit =
+    check(df.schema(c).dataType == StringType, s"Text column $c is not a string column")
+
+  private def arrayCol(df: DataFrame, c: String): Unit =
+    check(df.schema(c).dataType.isInstanceOf[ArrayType],
+      s"Vector column $c is not an array column")
+
+  private def numericCol(df: DataFrame, c: String, what: String): Unit =
+    check(df.schema(c).dataType.isInstanceOf[NumericType], s"$what column $c is not numeric")
+
+  private def groupableCol(df: DataFrame, c: String): Unit =
+    check(!df.schema(c).dataType.isInstanceOf[MapType],
+      s"Column $c is not groupable (map type)")
+
+  /** Length of the first non-null array in `c`: a one-row probe. */
+  private def dimOf(t: DataFrame, c: String): Option[Int] =
+    t.select(size(col(c)).as("n")).filter(col("n").isNotNull)
+      .limit(1).collect().headOption.map(_.getInt(0))
+
+  /** 400 on the first pair of known, different vector dimensions. */
+  private def dimsAgree(pairs: (Option[Int], Option[Int], String)*): Unit =
+    pairs.collectFirst { case (Some(x), Some(y), w) if x != y => (x, y, w) }
+      .foreach { case (x, y, w) =>
+        reject(400, s"Vector dimension mismatch between $w ($x vs $y)") }
+
+  /** The IVF routes' agreement of query vectors, stored index and
+    * centroids. */
+  private def ivfDimsAgree(df: DataFrame, vec: String, assign: DataFrame,
+      cent: DataFrame): Unit = {
+    val (qDim, cDim, iDim) =
+      (dimOf(df, vec), dimOf(cent, "cvec"), dimOf(assign, "vec"))
+    dimsAgree((qDim, cDim, "query vectors and the centroids"),
+      (iDim, cDim, "the stored index and the centroids"))
+  }
+
+  /** The bm25 query bag: comma-separated, lowercased to match the
+    * t-series tokenizer, at most 64 terms. */
+  private def queryTerms(p: Params): Seq[String] = {
+    val terms = p.list("terms", Nil).map(_.toLowerCase(java.util.Locale.ROOT))
+    check(terms.length <= 64,
+      "terms is capped at 64 — a serving query, not a batch join")
+    terms
+  }
+
+  private def optLong(r: Row, i: Int): Any = if (r.isNullAt(i)) null else r.getLong(i)
+
+  private def optString(r: Row, i: Int): Any =
+    if (r.isNullAt(i)) null else String.valueOf(r.get(i))
+
+  // ------------------------------------------------ the parameter reader
+
+  private def params(ex: HttpExchange): Params =
+    new Params(Option(ex.getRequestURI.getQuery).map(_.split("&").toSeq
       .flatMap { kv =>
         kv.split("=", 2) match {
           case Array(k, v) => Some(k -> v)
           case _ => None
         }
-      }.toMap).getOrElse(Map.empty)
+      }.toMap).getOrElse(Map.empty))
+
+  /** The one parameter reader over a request's query string. Every
+    * failure is a 400 carrying the message the routes have always sent;
+    * a default is never range-checked. */
+  private final class Params(qp: Map[String, String]) {
+    def raw(name: String): Option[String] = qp.get(name)
+    def contains(name: String): Boolean = qp.contains(name)
+    def getOrElse(name: String, dflt: String): String = qp.getOrElse(name, dflt)
+
+    /** A non-empty value. */
+    def get(name: String): Option[String] = qp.get(name).filter(_.nonEmpty)
+
+    /** Non-empty values of all `names`, or one 400 naming them all. */
+    def required(names: String*): Seq[String] = {
+      val vs = names.map(get)
+      check(vs.forall(_.isDefined),
+        if (names.length == 1) s"${names.head} parameter is required"
+        else s"${names.init.mkString(", ")} and ${names.last} parameters are required")
+      vs.flatten
+    }
+
+    /** An integer in [lo, hi]; the message names whichever bounds exist. */
+    def int(name: String, dflt: => Int, lo: Int = Int.MinValue,
+        hi: Int = Int.MaxValue): Int =
+      integral(name, dflt, lo, hi, Int.MaxValue)(_.toIntOption.map(_.toLong)).toInt
+
+    def long(name: String, dflt: => Long, lo: Long = Long.MinValue,
+        hi: Long = Long.MaxValue): Long =
+      integral(name, dflt, lo, hi, Long.MaxValue)(_.toLongOption)
+
+    private def integral(name: String, dflt: => Long, lo: Long, hi: Long,
+        top: Long)(parse: String => Option[Long]): Long = qp.get(name) match {
+      case None => dflt
+      case Some(s) =>
+        val v = parse(s).getOrElse(reject(400, s"$name must be an integer"))
+        if (hi != top) check(v >= lo && v <= hi, s"$name must be between $lo and $hi")
+        else check(v >= lo, s"$name must be >= $lo")
+        v
+    }
+
+    /** A required long whose absence and malformation share `msg`. */
+    def strictLong(name: String, msg: String): Long =
+      qp.get(name).flatMap(_.toLongOption).getOrElse(reject(400, msg))
+
+    /** A threshold in (0, 1]. */
+    def fraction(name: String, dflt: Double): Double = qp.get(name) match {
+      case None => dflt
+      case Some(s) =>
+        val t = s.toDoubleOption.getOrElse(reject(400, s"$name must be a number"))
+        check(!t.isNaN && t > 0.0 && t <= 1.0, s"$name must be in (0, 1]")
+        t
+    }
+
+    /** A comma-separated list, items trimmed, empty items dropped; a
+      * present list with no items is a 400. */
+    def list(name: String, dflt: => Seq[String]): Seq[String] = qp.get(name) match {
+      case None => dflt
+      case Some(s) =>
+        val xs = s.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
+        check(xs.nonEmpty, s"$name must be a non-empty comma-separated list")
+        xs
+    }
+  }
+
+  // ------------------------------------------------------------ responses
+
+  private def detail(msg: String): String = Json.obj("detail" -> msg)
 
   private def sendJson(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(UTF_8)
@@ -3394,6 +2044,11 @@ final class HttpFacade(
 }
 
 object HttpFacade {
+
+  /** A caller error on its way to the route mapper. A ControlThrowable,
+    * so the `case _: Exception` arms of the CSV, Arrow and ready
+    * handlers cannot swallow it. */
+  private final class Reject(val code: Int, val msg: String) extends ControlThrowable
 
   /** The ann-search route's dataflow, factored out so the spec can pin
     * the PLAN of the exact computation the route runs (collect + DPP on

@@ -2400,4 +2400,46 @@ class HttpFacadeSpec extends SparkSuite {
           case (e, o) => s"expected:\n>>> $e\nobserved:\n$o" }.mkString("\n"))
     }
   }
+
+  test("an unknown namespace on the tables route is a 404, like ?parent=") {
+    val r = get("/api/v1/catalog/namespaces/no_such_ns/tables")
+    assert(r.statusCode === 404, r.body)
+    assert(r.body === """{"detail":"Namespace not found: no_such_ns"}""")
+  }
+
+  test("results paging parameters are validated: non-integers and a " +
+      "negative offset are 400s") {
+    val exec = post("/api/v1/query/execute", "{\"sql\": \"SELECT l_orderkey " +
+      "FROM lineitem ORDER BY l_orderkey LIMIT 200\"}")
+    val qid = fieldOf(exec.body, "query_id")
+    def res(q: String) = get(s"/api/v1/query/$qid/results?$q")
+    val bad = Seq(
+      "page_size=abc" -> "page_size must be an integer",
+      "offset=abc" -> "offset must be an integer",
+      "page_size=100&offset=-5" -> "offset must be >= 0",
+      "page_size=7" -> "Invalid page_size. Must be one of: [100, 250, 500, 1000]")
+    for ((q, msg) <- bad) {
+      val r = res(q)
+      assert(r.statusCode === 400, q)
+      assert(r.body === s"""{"detail":"$msg"}""", q)
+    }
+    // a valid offset still pages from where it says
+    val ok = res("page_size=100&offset=150")
+    assert(ok.statusCode === 200)
+    assert(ok.body.contains("\"rows_returned\":50"), ok.body)
+    assert(ok.body.contains("\"rows_sent\":200"), ok.body)
+  }
+
+  test("a malformed JSON body is a 400 naming the parse error on execute, " +
+      "CSV export and Arrow export") {
+    for (route <- Seq("/api/v1/query/execute", "/api/v1/export/csv",
+        "/api/v1/export/arrow")) {
+      val r = post(route, "not json")
+      assert(r.statusCode === 400, route)
+      assert(r.body === """{"detail":"Invalid JSON body: expected '{' at 0"}""", route)
+      val trailing = post(route, """{"sql": "SELECT 1"} x""")
+      assert(trailing.statusCode === 400, route)
+      assert(trailing.body.contains("trailing content"), trailing.body)
+    }
+  }
 }
