@@ -211,4 +211,85 @@ class QueryExecutorSpec extends SparkSuite {
     val h = GraftEngine.healthCheck(spark)
     assert(h("engine") == "healthy" && h("status") == "healthy")
   }
+
+  test("execute and executeAsync record every terminal outcome alike: " +
+      "one span, one duration point, the active gauge restored") {
+    val ex = new QueryExecutor(spark, QueryConfig(minTimeout = 1))
+    spark.udf.register("spec_sleep_udf", (x: Long) => { Thread.sleep(5); x })
+    val slow = "SELECT sum(spec_sleep_udf(id)) FROM range(20000)"
+
+    def cancelWhenRunning(): Unit = {
+      val deadline = System.currentTimeMillis() + 30000
+      var running: Option[UUID] = None
+      while (running.isEmpty && System.currentTimeMillis() < deadline) {
+        running = ex.activeQueryIds
+          .find(id => ex.getStatus(id).exists(_.state == QueryState.Running))
+        if (running.isEmpty) Thread.sleep(20)
+      }
+      assert(running.isDefined, "query never reached running")
+      assert(ex.cancel(running.get))
+    }
+
+    // the caller-visible throw of the synchronous path, by outcome
+    def viaExecute(sql: String, timeout: Option[Int],
+                   cancel: Boolean): Option[Throwable] = {
+      @volatile var thrown: Option[Throwable] = None
+      val t = new Thread(() =>
+        try ex.execute(sql, timeout)
+        catch { case e: Throwable => thrown = Some(e) })
+      t.start()
+      if (cancel) cancelWhenRunning()
+      t.join(60000)
+      assert(!t.isAlive, "execute did not return")
+      thrown
+    }
+
+    def viaAsync(sql: String, timeout: Option[Int], cancel: Boolean): Unit = {
+      val r = ex.executeAsync(sql, timeout)
+      if (cancel) cancelWhenRunning()
+      assert(graft.results.ResultStream.awaitCompletion(() => ex.getStatus(r.queryId),
+        pollMs = 20L, maxWaitSec = 60).exists(_.isTerminal))
+    }
+
+    // Metrics is global: observe deltas, and find the run's span as the
+    // one whose query id was not seen before it
+    def observe(status: String)(run: => Unit): QuerySpan = {
+      val seen = Metrics.recentSpans.map(_.queryId).toSet
+      val active = Metrics.activeQueries
+      def count = Metrics.durationStats.get(status).fold(0L)(_._1)
+      val counted = count
+      def fresh = Metrics.recentSpans.filterNot(s => seen(s.queryId))
+      run
+      val deadline = System.currentTimeMillis() + 30000
+      while ((fresh.isEmpty || Metrics.activeQueries != active) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(fresh.size == 1, s"$status: spans ${fresh}")
+      assert(count == counted + 1, s"$status: duration points")
+      assert(Metrics.activeQueries == active, s"$status: active gauge")
+      fresh.head
+    }
+
+    val outcomes = Seq(
+      ("completed", "SELECT * FROM range(42)", None, false),
+      ("failed", "SELECT 1/0 AS x FROM range(1)", None, false),
+      ("timeout", slow, Some(1), false),
+      ("cancelled", slow, None, true))
+    for ((status, sql, timeout, cancel) <- outcomes) {
+      var thrown: Option[Throwable] = None
+      val sync = observe(status) { thrown = viaExecute(sql, timeout, cancel) }
+      status match {
+        case "completed" => assert(thrown.isEmpty, s"threw $thrown")
+        case "failed" => assert(thrown.isDefined)
+        case "timeout" =>
+          assert(thrown.exists(_.isInstanceOf[QueryTimeoutError]), s"threw $thrown")
+        case "cancelled" =>
+          assert(thrown.exists(_.isInstanceOf[QueryCancelledError]), s"threw $thrown")
+      }
+      val async = observe(status)(viaAsync(sql, timeout, cancel))
+      def key(s: QuerySpan) = (s.status, s.statusCode, s.timeoutSeconds,
+        s.rowsReturned, s.statusDescription.isDefined)
+      assert(sync.status == status)
+      assert(key(sync) == key(async), status)
+    }
+  }
 }
