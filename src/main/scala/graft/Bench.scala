@@ -37,8 +37,6 @@ import org.apache.spark.sql.SparkSession
  *  - default (driver gate): fork-per-chunk as above.
  *  - `SPARK_GRAFT_BENCH_ONLY=t01,t02` — in-process run of just that subset
  *    (diagnosis loop; equivalent to a single child).
- *  - `SPARK_GRAFT_BENCH_INPROC=1` — full inventory in one JVM (the
- *    round-4 behavior, kept for measuring the accumulation delta itself).
  *  - `--child <names>` argv — internal: child-JVM entry, prints
  *    `GRAFT_TIME <name> <median> <r1> <r2> <r3>` lines on stdout.
  *
@@ -53,6 +51,9 @@ import org.apache.spark.sql.SparkSession
  * the JSON line.
  */
 object Bench {
+  /** Queries per child JVM (the ~12 of the scaladoc above). */
+  private val ChunkSize = 12
+
   private[graft] def buildSession(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -237,7 +238,7 @@ object Bench {
 
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val inproc = only.isDefined || sys.env.contains("SPARK_GRAFT_BENCH_INPROC")
+    val inproc = only.isDefined
     val ordered = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
 
@@ -300,10 +301,8 @@ object Bench {
     val results: Seq[(String, Double)] =
       if (inproc) timeQueries(ordered, sfDir, cpus).map(r => (r._1, r._2))
       else {
-        val chunkSize = sys.env.get("SPARK_GRAFT_BENCH_CHUNK")
-          .flatMap(_.toIntOption).filter(_ > 0).getOrElse(12)
         val measured = scala.collection.mutable.Map.empty[String, Double]
-        val chunks = ordered.grouped(chunkSize).toSeq
+        val chunks = ordered.grouped(ChunkSize).toSeq
         chunks.foreach { chunk =>
           measured ++= forkChunk(chunk)
           val missing = chunk.filterNot(measured.contains)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.{GraftEngine, InvalidSqlError, QueryExecutor}
+import graft.engine.{AppConfig, GraftEngine, QueryExecutor}
 import graft.results.{ResultStream, ValueFormat}
 import graft.tables.Tables
 
@@ -23,20 +23,21 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = GraftEngine.buildSession()
+    val cfg = AppConfig.fromEnv()
+    val spark = GraftEngine.buildSession(cfg)
     spark.sparkContext.setLogLevel("WARN")
     Tables.register(spark, sfDir)
-    val executor = new QueryExecutor(spark)
+    val executor = new QueryExecutor(spark, cfg.query)
 
     args.toList match {
       case "sql" :: sql :: rest =>
-        runOne(executor, sql, csv = rest.contains("--csv"))
+        runOne(executor, sql, csv = rest.contains("--csv"), cfg.`export`.maxSizeBytes)
       case "repl" :: _ =>
         scala.io.Source.stdin.getLines().map(_.trim).filter(_.nonEmpty)
           .takeWhile(l => l != "exit" && l != "quit")
-          .foreach(runOne(executor, _, csv = false))
+          .foreach(runOne(executor, _, csv = false, cfg.`export`.maxSizeBytes))
       case "catalog" :: _ =>
-        val provider = new graft.catalog.SparkCatalogProvider(spark)
+        val provider = graft.catalog.IcebergCatalogBinding.providerFor(spark, cfg.catalog)
         provider.listNamespaces().foreach { ns =>
           println(ns.mkString("."))
           provider.listTables(ns).foreach(t => println(s"  $t"))
@@ -49,19 +50,21 @@ object Cli {
     spark.stop()
   }
 
-  private def runOne(executor: QueryExecutor, sql: String, csv: Boolean): Unit =
+  /** One query through the executor's lifecycle, printed, then freed;
+    * a gate rejection or failure prints one NDJSON error line. */
+  private def runOne(executor: QueryExecutor, sql: String, csv: Boolean,
+                     maxExportBytes: Long): Unit =
     try {
       val result = executor.execute(sql)
-      if (csv)
-        ResultStream.csv(result).foreach(chunk => System.out.write(chunk))
-      else
-        ResultStream.ndjson(Some(result), result.queryId.toString,
-          pageSize = 1000).foreach(println)
-      System.out.flush()
-      executor.cleanup(result.queryId)
+      try {
+        if (csv)
+          ResultStream.csv(result, maxExportBytes).foreach(chunk => System.out.write(chunk))
+        else
+          ResultStream.ndjson(Some(result), result.queryId.toString,
+            pageSize = 1000).foreach(println)
+        System.out.flush()
+      } finally executor.cleanup(result.queryId)
     } catch {
-      case e: InvalidSqlError =>
-        println(s"""{"type":"error","error":${ValueFormat.jsonString(e.getMessage)}}""")
       case e: Exception =>
         println(s"""{"type":"error","error":${ValueFormat.jsonString(
           String.valueOf(e.getMessage))}}""")

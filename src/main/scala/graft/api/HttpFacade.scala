@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions.{col, count, count_distinct, expr, lit, mi
 import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType, IntegerType, LongType, MapType, NumericType, ShortType, StringType, StructType}
 
 import graft.catalog.{CatalogProvider, SparkCatalogProvider}
-import graft.engine.{GraftEngine, InvalidSqlError, QueryExecutor, QueryResult, QueryState}
+import graft.engine.{AppConfig, ExportConfig, GraftEngine, InvalidSqlError, QueryExecutor, QueryResult, QueryState}
 import graft.ops.{Bloom, Classifier, CorpusBuild, Dedup, Layout, Multimodal, Profile, Sampling, Sketches, TextAnalysis}
 import graft.results.{ResultStream, ValueFormat}
 import graft.tables.Tables
@@ -54,6 +54,10 @@ import graft.tables.Tables
  * Namespaces are dot-joined in paths (the reference uses a unit-separator
  * wire encoding for the same purpose — see graft.catalog.NamespacePath).
  *
+ * A CSV export larger than `maxExportBytes` (the
+ * `ICEBERG_EXPLORER_EXPORT__MAX_SIZE_BYTES` setting, 1 GiB by default) is
+ * refused; an inline-SQL export frees its buffered result once streamed.
+ *
  * Concurrency: requests run on a fixed pool; the engine layers are
  * thread-safe (SURVEY §7.5(6) — Spark inverts the reference's serialized
  * single-connection model).
@@ -61,7 +65,8 @@ import graft.tables.Tables
 final class HttpFacade(
     spark: org.apache.spark.sql.SparkSession,
     executor: QueryExecutor,
-    provider: CatalogProvider) {
+    provider: CatalogProvider,
+    maxExportBytes: Long = ExportConfig().maxSizeBytes) {
 
   private var server: HttpServer = _
 
@@ -154,9 +159,9 @@ final class HttpFacade(
     "tokenize" -> tokenizeRoute _, "media-search" -> mediaSearchRoute _,
     "box-search" -> boxSearchRoute _, "bloom-check" -> bloomCheckRoute _)
 
-  private def route(ex: HttpExchange): Unit =
+  private def route(ex: HttpExchange): Unit = {
+    val path = ex.getRequestURI.getPath
     try {
-      val path = ex.getRequestURI.getPath
       val method = ex.getRequestMethod
       (method, path.split("/").filter(_.nonEmpty).toList) match {
         case ("POST", List("api", "v1", "query", "execute")) => execute(ex)
@@ -193,12 +198,18 @@ final class HttpFacade(
       case e: Throwable =>
         try e match {
           case r: HttpFacade.Reject => sendJson(ex, r.code, detail(r.msg))
+          case g: InvalidSqlError => sendJson(ex, 400, detail(g.getMessage))
           case n: graft.catalog.NoSuchEntityException =>
             sendJson(ex, 404, detail(n.getMessage))
+          // the export routes answer an engine failure with a fixed body
+          // (reference: export.py), never the failure's own message
+          case _ if path.startsWith("/api/v1/export/") =>
+            sendJson(ex, 500, detail("Internal server error"))
           case _ =>
             sendJson(ex, 500, detail(Option(e.getMessage).getOrElse("Internal error")))
         } catch { case _: Throwable => () }
     } finally ex.close()
+  }
 
   // ------------------------------------------------------ lifecycle handlers
 
@@ -207,10 +218,7 @@ final class HttpFacade(
     val sql = body.get("sql").collect { case s: String => s }
       .getOrElse(reject(400, "Field 'sql' is required"))
     val timeout = body.get("timeout").collect { case n: Long => n.toInt }
-    val r = try executor.execute(sql, timeout) catch {
-      case e: InvalidSqlError => reject(400, e.getMessage)
-      case e: Exception => reject(500, e.getMessage)
-    }
+    val r = executor.execute(sql, timeout)
     sendJson(ex, 200, Json.obj(
       "query_id" -> r.queryId.toString, "status" -> r.state.value))
   }
@@ -264,14 +272,12 @@ final class HttpFacade(
       case (Some(_), Some(_)) =>
         reject(400, "Provide either query_id or sql, not both")
       case (Some(s), None) =>
-        try streamCsv(ex, ResultStream.csvForSql(executor, s))
-        catch {
-          case e: InvalidSqlError => reject(400, e.getMessage)
-          case _: Exception => reject(500, "Internal server error")
-        }
+        val r = executor.execute(s)
+        try streamCsv(ex, ResultStream.csv(r, maxExportBytes))
+        finally executor.cleanup(r.queryId)
       case (None, Some(qid)) =>
         val r = query(qid)
-        try streamCsv(ex, ResultStream.csv(r))
+        try streamCsv(ex, ResultStream.csv(r, maxExportBytes))
         catch { case e: ResultStream.CsvExportError => reject(400, e.getMessage) }
     }
   }
@@ -284,21 +290,16 @@ final class HttpFacade(
   private def exportArrow(ex: HttpExchange): Unit = {
     val sql = jsonBody(ex).get("sql").collect { case s: String => s }
       .getOrElse(reject(400, "sql must be provided"))
-    try {
-      val df = executor.dataFrameForExport(sql)
-      ex.getResponseHeaders.set("Content-Type",
-        "application/vnd.apache.arrow.stream")
-      ex.getResponseHeaders.set("Content-Disposition",
-        "attachment; filename=\"" +
-          ValueFormat.sanitizeFilename("query_results.arrow") + "\"")
-      ex.sendResponseHeaders(200, 0)
-      val out: OutputStream = ex.getResponseBody
-      org.apache.spark.sql.GraftArrow.writeIpcStream(df, out)
-      out.close()
-    } catch {
-      case e: InvalidSqlError => reject(400, e.getMessage)
-      case _: Exception => reject(500, "Internal server error")
-    }
+    val df = executor.dataFrameForExport(sql)
+    ex.getResponseHeaders.set("Content-Type",
+      "application/vnd.apache.arrow.stream")
+    ex.getResponseHeaders.set("Content-Disposition",
+      "attachment; filename=\"" +
+        ValueFormat.sanitizeFilename("query_results.arrow") + "\"")
+    ex.sendResponseHeaders(200, 0)
+    val out: OutputStream = ex.getResponseBody
+    org.apache.spark.sql.GraftArrow.writeIpcStream(df, out)
+    out.close()
   }
 
   private def streamCsv(ex: HttpExchange, chunks: Iterator[Array[Byte]]): Unit = {
@@ -2152,14 +2153,15 @@ object HttpFacade {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(8080)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = GraftEngine.buildSession()
+    val cfg = AppConfig.fromEnv()
+    val spark = GraftEngine.buildSession(cfg)
     spark.sparkContext.setLogLevel("WARN")
     Tables.register(spark, sfDir)
     // config-gated Iceberg REST binding: lights up the live catalog when
     // the runtime jar is present, falls back to the session catalog here
-    val provider = graft.catalog.IcebergCatalogBinding.providerFor(
-      spark, graft.engine.AppConfig.fromEnv().catalog)
-    val facade = new HttpFacade(spark, new QueryExecutor(spark), provider)
+    val provider = graft.catalog.IcebergCatalogBinding.providerFor(spark, cfg.catalog)
+    val facade = new HttpFacade(spark, new QueryExecutor(spark, cfg.query), provider,
+      cfg.`export`.maxSizeBytes)
     val bound = facade.start(port)
     System.err.println(s"[graft-http] serving on 127.0.0.1:$bound")
     Thread.currentThread.join()

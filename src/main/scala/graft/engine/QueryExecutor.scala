@@ -1,9 +1,10 @@
 package graft.engine
 
 import java.util.UUID
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ExecutionException, FutureTask, TimeUnit, TimeoutException}
 import java.util.concurrent.atomic.AtomicBoolean
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
@@ -25,20 +26,26 @@ import org.apache.spark.sql.SparkSession
  *  - results are buffered bounded: `toLocalIterator` + `maxRows` cap,
  *    never an unbounded collect (100 TB design rule). The reference's
  *    `max_rows` config was dead code; we enforce it (SURVEY §2.A note).
+ *
+ * One lifecycle serves every SQL-running caller: `register` (gate, timeout
+ * clamp, registry, active gauge) → `run` (running → worker under the
+ * timeout → `record`, the one writer of the duration point, row count and
+ * span → release of the gauge and cancel flag → rethrow). [[execute]]
+ * runs it on the caller's thread, [[executeAsync]] on a daemon runner;
+ * the HTTP façade's inline-SQL CSV export is an [[execute]] followed by
+ * [[cleanup]]. The Arrow export ([[dataFrameForExport]]) stays outside it.
  */
-final class QueryExecutor(
-    spark: SparkSession,
-    config: QueryConfig = QueryConfig()) {
+final class QueryExecutor(spark: SparkSession, config: QueryConfig = QueryConfig()) {
 
   private val activeQueries = new ConcurrentHashMap[UUID, QueryResult]()
   private val cancelFlags = new ConcurrentHashMap[UUID, AtomicBoolean]()
 
   def validateTimeout(timeout: Option[Int]): Int = config.clampTimeout(timeout)
 
-  /** Validate, execute with timeout, return the terminal QueryResult.
-    * Throws like the reference: InvalidSqlError before registration,
-    * QueryTimeoutError / QueryCancelledError / the query's own failure
-    * after (state is recorded on the result first).
+  /** Validate, execute with timeout on the caller's thread, return the
+    * terminal QueryResult. Throws like the reference: InvalidSqlError
+    * before registration, QueryTimeoutError / QueryCancelledError / the
+    * query's own failure after (state is recorded on the result first).
     *
     * `params` binds positional `?` placeholders (the reference passes
     * DuckDB positional parameters, e.g. api/routes/catalog.py:236; Spark 4
@@ -46,38 +53,31 @@ final class QueryExecutor(
     * post-gate, so parameter VALUES can never smuggle keywords past A1). */
   def execute(sql: String, timeout: Option[Int] = None,
               params: Seq[Any] = Seq.empty): QueryResult = {
-    SqlGate.validate(sql)
-    val timeoutSec = validateTimeout(timeout)
+    val (result, timeoutSec, cancelled) = register(sql, timeout)
+    run(result, timeoutSec, cancelled, params)
+    result
+  }
 
-    val result = new QueryResult(sql)
-    val boundParams = params.toArray
-    val cancelled = new AtomicBoolean(false)
-    activeQueries.put(result.queryId, result)
-    cancelFlags.put(result.queryId, cancelled)
-
-    Metrics.incrementActiveQueries()
-    try {
-      result.setRunning()
-      runWithTimeout(result, timeoutSec, cancelled, boundParams)
-      Metrics.recordQueryDuration(result.metrics.durationSeconds, result.state.value)
-      Metrics.recordQueryRows(result.metrics.rowsReturned)
-      emitSpan(result, timeoutSec, result.state.value, None)
-      result
-    } catch {
-      case e: QueryTimeoutError =>
-        Metrics.recordQueryDuration(timeoutSec.toDouble, "timeout")
-        emitSpan(result, timeoutSec, "timeout", Some("Query timeout")); throw e
-      case e: QueryCancelledError =>
-        Metrics.recordQueryDuration(result.metrics.durationSeconds, "cancelled")
-        emitSpan(result, timeoutSec, "cancelled", None); throw e
-      case NonFatal(e) =>
-        Metrics.recordQueryDuration(result.metrics.durationSeconds, "failed")
-        emitSpan(result, timeoutSec, "failed",
-          Some(Option(e.getMessage).getOrElse(e.toString))); throw e
-    } finally {
-      Metrics.decrementActiveQueries()
-      cancelFlags.remove(result.queryId)
-    }
+  /**
+   * Fire-and-poll execution — registers the query and returns its (live)
+   * QueryResult immediately; the same tracked run happens on a daemon
+   * runner thread. This is the reference's actual serving shape: the
+   * execute endpoint dispatches to a thread and other endpoints poll
+   * `get_status` while the query runs (reference:
+   * api/routes/query.py:64,122-136). The terminal outcome (including
+   * timeout/cancel/failure) is recorded on the result; nothing is thrown
+   * to the caller after registration.
+   */
+  def executeAsync(sql: String, timeout: Option[Int] = None,
+                   params: Seq[Any] = Seq.empty): QueryResult = {
+    val (result, timeoutSec, cancelled) = register(sql, timeout)
+    val runner = new Thread(() =>
+      try run(result, timeoutSec, cancelled, params)
+      catch { case NonFatal(_) => () }, // the outcome is on the result
+      s"graft-async-${result.queryId}")
+    runner.setDaemon(true)
+    runner.start()
+    result
   }
 
   /** Gate-validated DataFrame for columnar export: the same A1 gate and
@@ -90,96 +90,9 @@ final class QueryExecutor(
     spark.sql(sql).limit(config.maxRows)
   }
 
-  /** One trace record per execution, with the reference span's attribute
-    * set and OK/ERROR status semantics (reference: executor.py:181-222 —
-    * timeout/failure are ERROR, cancellation is OK). */
-  private def emitSpan(result: QueryResult, timeoutSec: Int,
-                       status: String, error: Option[String]): Unit =
-    Metrics.recordSpan(QuerySpan(
-      name = "spark.query",
-      queryId = result.queryId.toString,
-      timeoutSeconds = timeoutSec,
-      status = status,
-      durationSeconds = Some(result.metrics.durationSeconds),
-      rowsReturned =
-        if (status == "completed") Some(result.metrics.rowsReturned) else None,
-      statusCode =
-        if (status == "failed" || status == "timeout") "ERROR" else "OK",
-      statusDescription = error))
-
-  private def runWithTimeout(
-      result: QueryResult, timeoutSec: Int, cancelled: AtomicBoolean,
-      params: Array[Any] = Array.empty): Unit = {
-    val done = new CountDownLatch(1)
-    val errorHolder = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val jobGroup = result.queryId.toString
-
-    val worker = new Thread(() => {
-      try {
-        if (!cancelled.get()) {
-          // job group tags every job this thread triggers; cancelJobGroup
-          // with interruptOnCancel kills the running tasks.
-          spark.sparkContext.setJobGroup(jobGroup, result.sql, interruptOnCancel = true)
-          val df = if (params.isEmpty) spark.sql(result.sql)
-                   else spark.sql(result.sql, params)
-          val schema = df.schema
-          if (!cancelled.get()) {
-            // bounded driver buffering: maxRows + 1 detects truncation
-            // without materializing the full result on the driver.
-            val it = df.toLocalIterator()
-            val buf = Vector.newBuilder[org.apache.spark.sql.Row]
-            var n = 0
-            var truncated = false
-            while (it.hasNext && !truncated && !cancelled.get()) {
-              val row = it.next()
-              if (n < config.maxRows) { buf += row; n += 1 }
-              else truncated = true
-            }
-            if (!cancelled.get())
-              result.setCompleted(buf.result(), schema, truncated)
-          }
-        }
-      } catch {
-        case NonFatal(e) => if (!cancelled.get()) errorHolder.set(e)
-      } finally {
-        spark.sparkContext.clearJobGroup()
-        done.countDown()
-      }
-    }, s"graft-query-$jobGroup")
-    worker.setDaemon(true)
-    worker.start()
-
-    val completed = done.await(timeoutSec.toLong, TimeUnit.SECONDS)
-
-    if (!completed) {
-      cancelled.set(true)
-      // AndFutureJobs: also kills jobs the worker submits AFTER this call
-      // (cancel can land between planning and job submission).
-      spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
-      result.setFailed("Query timeout exceeded")
-      throw new QueryTimeoutError(s"Query exceeded ${timeoutSec}s timeout")
-    }
-    if (cancelled.get()) {
-      result.setCancelled()
-      throw new QueryCancelledError("Query was cancelled")
-    }
-    Option(errorHolder.get()).foreach { e =>
-      result.setFailed(e.getMessage)
-      throw e
-    }
-  }
-
-  /**
-   * Fire-and-poll execution — registers the query and returns its (live)
-   * QueryResult immediately; state transitions happen on a daemon worker.
-   * This is the reference's actual serving shape: the execute endpoint
-   * dispatches to a thread and other endpoints poll `get_status` while the
-   * query runs (reference: api/routes/query.py:64,122-136). Terminal
-   * outcome (including timeout/cancel/failure) is recorded on the result;
-   * nothing is thrown to the caller.
-   */
-  def executeAsync(sql: String, timeout: Option[Int] = None,
-                   params: Seq[Any] = Seq.empty): QueryResult = {
+  /** Gate (before anything is registered), clamp the timeout, and make
+    * the query visible to `getStatus`/`cancel` and the active gauge. */
+  private def register(sql: String, timeout: Option[Int]): (QueryResult, Int, AtomicBoolean) = {
     SqlGate.validate(sql)
     val timeoutSec = validateTimeout(timeout)
     val result = new QueryResult(sql)
@@ -187,61 +100,125 @@ final class QueryExecutor(
     activeQueries.put(result.queryId, result)
     cancelFlags.put(result.queryId, cancelled)
     Metrics.incrementActiveQueries()
-    val runner = new Thread(() => {
+    (result, timeoutSec, cancelled)
+  }
+
+  /** The one tracked run: execute under the timeout, record the outcome,
+    * release the active gauge and cancel flag, rethrow any failure. */
+  private def run(result: QueryResult, timeoutSec: Int,
+                  cancelled: AtomicBoolean, params: Seq[Any]): Unit =
+    try {
+      result.setRunning()
+      runWithTimeout(result, timeoutSec, cancelled, params.toArray)
+      record(result, timeoutSec, result.state.value, None)
+    } catch {
+      case e: QueryTimeoutError =>
+        record(result, timeoutSec, "timeout", Some("Query timeout")); throw e
+      case e: QueryCancelledError =>
+        record(result, timeoutSec, "cancelled", None); throw e
+      case NonFatal(e) =>
+        record(result, timeoutSec, "failed",
+          Some(Option(e.getMessage).getOrElse(e.toString))); throw e
+    } finally {
+      Metrics.decrementActiveQueries()
+      cancelFlags.remove(result.queryId)
+    }
+
+  /** The outcome's metrics — one duration point, the returned rows of a
+    * completed query — and one trace record per execution, with the
+    * reference span's attribute set and OK/ERROR status semantics
+    * (reference: executor.py:181-222 — timeout/failure are ERROR,
+    * cancellation is OK). A timeout records its timeout as the duration. */
+  private def record(result: QueryResult, timeoutSec: Int,
+                     status: String, error: Option[String]): Unit = {
+    val rows = if (status == "completed") Some(result.metrics.rowsReturned) else None
+    rows.foreach(Metrics.recordQueryRows)
+    val seconds = if (status == "timeout") timeoutSec.toDouble else result.metrics.durationSeconds
+    Metrics.recordQueryDuration(seconds, status)
+    Metrics.recordSpan(QuerySpan(
+      name = "spark.query",
+      queryId = result.queryId.toString,
+      timeoutSeconds = timeoutSec,
+      status = status,
+      durationSeconds = Some(result.metrics.durationSeconds),
+      rowsReturned = rows,
+      statusCode =
+        if (status == "failed" || status == "timeout") "ERROR" else "OK",
+      statusDescription = error))
+  }
+
+  /** Run the query on a worker thread tagged with the query's job group
+    * and wait for it at most `timeoutSec`; the caller's thread stays free
+    * to time out even while the worker is stuck in driver-side code. */
+  private def runWithTimeout(
+      result: QueryResult, timeoutSec: Int, cancelled: AtomicBoolean,
+      params: Array[Any]): Unit = {
+    val jobGroup = result.queryId.toString
+    val work = new FutureTask[Unit](() =>
       try {
-        result.setRunning()
-        runWithTimeout(result, timeoutSec, cancelled, params.toArray)
-        Metrics.recordQueryDuration(result.metrics.durationSeconds, result.state.value)
-        Metrics.recordQueryRows(result.metrics.rowsReturned)
-        emitSpan(result, timeoutSec, result.state.value, None)
-      } catch {
-        // outcome already recorded on the result; span mirrors it
-        case _: QueryTimeoutError =>
-          Metrics.recordQueryDuration(timeoutSec.toDouble, "timeout")
-          emitSpan(result, timeoutSec, "timeout", Some("Query timeout"))
-        case _: QueryCancelledError =>
-          Metrics.recordQueryDuration(result.metrics.durationSeconds, "cancelled")
-          emitSpan(result, timeoutSec, "cancelled", None)
-        case NonFatal(e) =>
-          Metrics.recordQueryDuration(result.metrics.durationSeconds, "failed")
-          emitSpan(result, timeoutSec, "failed",
-            Some(Option(e.getMessage).getOrElse(e.toString)))
-      } finally {
-        Metrics.decrementActiveQueries()
-        cancelFlags.remove(result.queryId)
-      }
-    }, s"graft-async-${result.queryId}")
-    runner.setDaemon(true)
-    runner.start()
-    result
+        if (!cancelled.get()) {
+          // job group tags every job this thread triggers; cancelJobGroup
+          // with interruptOnCancel kills the running tasks.
+          spark.sparkContext.setJobGroup(jobGroup, result.sql, interruptOnCancel = true)
+          val df = if (params.isEmpty) spark.sql(result.sql)
+                   else spark.sql(result.sql, params)
+          if (!cancelled.get()) {
+            // bounded driver buffering: maxRows + 1 detects truncation
+            // without materializing the full result on the driver; a
+            // cancel stops the next partition fetch through the job group.
+            val rows = df.toLocalIterator().asScala.take(config.maxRows + 1).toVector
+            if (!cancelled.get())
+              result.setCompleted(rows.take(config.maxRows), df.schema,
+                truncated = rows.length > config.maxRows)
+          }
+        }
+      } finally spark.sparkContext.clearJobGroup())
+    val worker = new Thread(work, s"graft-query-$jobGroup")
+    worker.setDaemon(true)
+    worker.start()
+
+    try work.get(timeoutSec.toLong, TimeUnit.SECONDS) catch {
+      case _: TimeoutException =>
+        cancelled.set(true)
+        // AndFutureJobs: also kills jobs the worker submits AFTER this call
+        // (cancel can land between planning and job submission).
+        spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
+        result.setFailed("Query timeout exceeded")
+        throw new QueryTimeoutError(s"Query exceeded ${timeoutSec}s timeout")
+      case e: ExecutionException if !cancelled.get() =>
+        result.setFailed(e.getCause.getMessage)
+        throw e.getCause
+      case _: ExecutionException => () // a cancel's job failure
+    }
+    if (cancelled.get()) {
+      result.setCancelled()
+      throw new QueryCancelledError("Query was cancelled")
+    }
   }
 
   /** Cancel a running query — idempotent; false if unknown or terminal
     * (reference: executor.py:294-324). */
-  def cancel(queryId: UUID): Boolean = {
-    val result = activeQueries.get(queryId)
-    val flag = cancelFlags.get(queryId)
-    if (result == null || flag == null) return false
-    if (result.isTerminal) return false
-    flag.set(true)
-    // AndFutureJobs closes the plan-time race: a job group cancel issued
-    // while the query is still being planned would otherwise be a no-op
-    // and the action would run to completion once submitted.
-    spark.sparkContext.cancelJobGroupAndFutureJobs(queryId.toString)
-    if (result.state == QueryState.Running) result.setCancelled()
-    true
-  }
+  def cancel(queryId: UUID): Boolean =
+    (Option(activeQueries.get(queryId)), Option(cancelFlags.get(queryId))) match {
+      case (Some(result), Some(flag)) if !result.isTerminal =>
+        flag.set(true)
+        // AndFutureJobs closes the plan-time race: a job group cancel issued
+        // while the query is still being planned would otherwise be a no-op
+        // and the action would run to completion once submitted.
+        spark.sparkContext.cancelJobGroupAndFutureJobs(queryId.toString)
+        if (result.state == QueryState.Running) result.setCancelled()
+        true
+      case _ => false
+    }
 
   /** Lifecycle lookup (reference: executor.py:326-335). */
   def getStatus(queryId: UUID): Option[QueryResult] =
     Option(activeQueries.get(queryId))
 
   /** IDs of queries currently registered and not yet cleaned up. */
-  def activeQueryIds: Seq[UUID] = {
-    import scala.jdk.CollectionConverters._
+  def activeQueryIds: Seq[UUID] =
     activeQueries.entrySet().asScala
       .filter(e => !e.getValue.isTerminal).map(_.getKey).toSeq
-  }
 
   /** De-register and free buffered results (reference: executor.py:337-347). */
   def cleanup(queryId: UUID): Unit = {

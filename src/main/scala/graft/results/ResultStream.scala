@@ -135,13 +135,6 @@ object ResultStream {
         }
     }
 
-  /** CSV export for inline SQL — the reference's `POST /export/csv`
-    * accepts sql XOR query_id (reference: export.py:153-228); this is the
-    * sql arm: validate+execute synchronously, then stream. */
-  def csvForSql(executor: graft.engine.QueryExecutor, sql: String,
-                maxSizeBytes: Long = 1073741824L): Iterator[Array[Byte]] =
-    csv(executor.execute(sql), maxSizeBytes)
-
   /**
    * Streaming CSV export with byte cap — header, per-row formatting via
    * [[ValueFormat.csvValue]], flushed in ~8 KiB chunks, aborting when the

@@ -2442,4 +2442,32 @@ class HttpFacadeSpec extends SparkSuite {
       assert(trailing.body.contains("trailing content"), trailing.body)
     }
   }
+
+  test("an inline-SQL CSV export frees its buffered result once streamed") {
+    val r = post("/api/v1/export/csv",
+      """{"sql": "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey"}""")
+    assert(r.statusCode === 200, r.body)
+    val qid = graft.engine.Metrics.recentSpans.last.queryId
+    val st = get(s"/api/v1/query/$qid/status")
+    assert(st.statusCode === 404, st.body)
+  }
+
+  test("CSV export honours the facade's configured export size cap") {
+    port // the shared facade registers the fixture tables
+    val capped = new HttpFacade(spark, new QueryExecutor(spark),
+      new SparkCatalogProvider(spark), maxExportBytes = 10L)
+    val cappedPort = capped.start(0)
+    try {
+      def postCapped(path: String, body: String) = client.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$cappedPort$path"))
+          .POST(BodyPublishers.ofString(body)).build(), BodyHandlers.ofString())
+      val exec = postCapped("/api/v1/query/execute",
+        """{"sql": "SELECT r_regionkey, r_name FROM region"}""")
+      assert(exec.statusCode === 200, exec.body)
+      val qid = fieldOf(exec.body, "query_id")
+      val r = postCapped("/api/v1/export/csv", s"""{"query_id": "$qid"}""")
+      assert(r.statusCode === 400, r.body)
+      assert(r.body === """{"detail":"Export size exceeds maximum of 10 bytes"}""")
+    } finally capped.stop()
+  }
 }

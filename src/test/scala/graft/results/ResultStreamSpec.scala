@@ -140,17 +140,4 @@ class ResultStreamSpec extends AnyFunSuite {
     assert(ValueFormat.jsonValue(Double.NaN) === "\"NaN\"")
     assert(ValueFormat.jsonValue("tab\there") === "\"tab\\there\"")
   }
-
-  test("csvForSql: inline-SQL export arm executes then streams") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
-    val executor = new graft.engine.QueryExecutor(spark)
-    val out = ResultStream.csvForSql(executor,
-      "SELECT id, id * 2 AS d FROM range(3) ORDER BY id")
-      .map(new String(_, "UTF-8")).mkString
-    assert(out === "id,d\r\n0,0\r\n1,2\r\n2,4\r\n")
-    intercept[graft.engine.InvalidSqlError] {
-      ResultStream.csvForSql(executor, "DELETE FROM t")
-    }
-  }
 }
